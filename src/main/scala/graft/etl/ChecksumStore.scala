@@ -63,6 +63,6 @@ final class ChecksumStore(spark: SparkSession, storeDir: String) {
   /** Merge-on-compact ([[DfStore.compact]] discipline): rewrite the
     * per-ingest appends into the merged |groups| frame via the shared
     * verified swap. Returns (files before, files after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprint, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, fingerprint)
 }

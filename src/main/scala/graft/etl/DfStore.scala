@@ -106,8 +106,7 @@ final class DfStore(spark: SparkSession, storeDir: String, n: Int = 5) {
 
   /** Merge-on-compact ([[CmsStore.compact]]): rewrite the appends into
     * the merged frame via the shared verified swap. */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
+  def compact(): (Long, Long) =
     ParquetStore.compact(spark, storeDir,
-      dfCounts.select(col("hs"), col("df").as("df", shapeMeta)),
-      targetFileBytes)
+      dfCounts.select(col("hs"), col("df").as("df", shapeMeta)))
 }

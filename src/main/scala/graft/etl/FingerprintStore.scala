@@ -97,8 +97,8 @@ abstract class FingerprintStore(spark: SparkSession, storeDir: String,
 
   /** Fold the per-ingest appends into the distinct frame via the
     * shared verified swap. Returns (files before, files after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprints, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, fingerprints)
 }
 
 /** Incremental AUDIO-fingerprint store — the [[DhashStore]] family's
@@ -235,8 +235,8 @@ abstract class SequenceFpStore(spark: SparkSession, storeDir: String,
 
   /** Fold the per-ingest appends into the distinct frame via the
     * shared verified swap. Returns (files before, files after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprints, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, fingerprints)
 }
 
 /** The MJPEG/AVI binding (q277/q278/q279's state). Non-MJPEG videos

@@ -1,7 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -74,13 +73,13 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     (if (cols.nonEmpty) w.partitionBy(cols: _*) else w).parquet(path(table))
   }
 
+  /** True iff the table directory exists and is non-empty. Goes
+    * through the path's Hadoop FileSystem, so `file:`/`hdfs:` URIs and
+    * plain paths resolve alike. */
   def exists(table: String): Boolean = {
-    val p = Paths.get(path(table))
-    Files.exists(p) && {
-      val s = Files.list(p)
-      try s.findFirst().isPresent
-      finally s.close()
-    }
+    val p = new Path(path(table))
+    val fs = ParquetStore.hfs(spark, p)
+    fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
   def read(table: String): DataFrame = spark.read.parquet(path(table))
@@ -136,70 +135,19 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     }
   }
 
-  /** Compact a table's accumulated small append-files into ~`targetFileBytes`
+  /** Compact a table's accumulated small append-files into ~128 MiB
     * outputs. Daily incremental appends (load.py's cadence) add a file
     * per run per partition; after months the fact is thousands of tiny
     * files and scan planning/open overhead dominates — the classic
-    * small-files problem of append-only sinks. Rewrite is atomic-enough
-    * for the sink's single-writer contract: write to a temp dir, swap
-    * directories, drop the old (a transactional table format does this
-    * with a commit instead of a rename — same shape).
-    *
-    * Crash-safe under the single-writer contract: every crash window
-    * of a previous run is healed at entry before any new work —
-    *  - stale `.compact_tmp` (died mid-write): deleted, the rewrite
-    *    restarts from the live table;
-    *  - `.compact_old` present and the table directory MISSING (died
-    *    between the two moves — the one window where data is only in
-    *    `.compact_old`): the old directory is restored as the table;
-    *  - `.compact_old` present alongside a live table (died after the
-    *    swap, before cleanup): the leftover is deleted.
-    * So the manual recovery the directory names suggest (move
-    * `<table>.compact_old` back) is never required — rerunning
-    * `compact` repairs and retries.
+    * small-files problem of append-only sinks. The rewrite is the
+    * stores' shared temp-write-then-verified-swap
+    * ([[ParquetStore.compact]]), keeping the table's partition layout;
+    * every crash window of a previous run heals on the next call, so
+    * rerunning `compact` repairs and retries.
     * Returns (files before, files after). */
-  def compact(table: String, targetFileBytes: Long = 128L << 20)
-      : (Long, Long) = {
-    import java.nio.file.{Files => JFiles}
-    import scala.jdk.CollectionConverters._
-    val dir = Paths.get(path(table))
-    def parquetFiles(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val s = JFiles.walk(p)
-      try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
-      finally s.close()
-    }
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val s = JFiles.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(JFiles.delete)
-      finally s.close()
-    }
-    val tmp = Paths.get(path(table) + ".compact_tmp")
-    val old = Paths.get(path(table) + ".compact_old")
-    // heal any crash window of a previous run (see scaladoc)
-    if (JFiles.exists(tmp)) rmTree(tmp)
-    if (JFiles.exists(old)) {
-      if (!JFiles.exists(dir)) JFiles.move(old, dir) // mid-swap crash
-      else rmTree(old) // post-swap crash: table is live, drop leftover
-    }
-    val before = parquetFiles(dir)
-    val totalBytes = before.map(JFiles.size).sum
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = read(table)
-    val partCols = partitioning.getOrElse(table, Nil)
-    val repartitioned =
-      if (partCols.nonEmpty)
-        // co-partition by the table's partition columns so each task
-        // writes few directories (not every task × every partition)
-        df.repartition(nFiles, partCols.map(col): _*)
-      else df.repartition(nFiles)
-    val w = repartitioned.write.mode(SaveMode.Overwrite)
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-      .parquet(tmp.toString)
-    JFiles.move(dir, old)
-    JFiles.move(tmp, dir)
-    rmTree(old)
-    (before.size.toLong, parquetFiles(dir).size.toLong)
-  }
+  def compact(table: String): (Long, Long) =
+    ParquetStore.compact(spark, path(table), read(table),
+      partitioning.getOrElse(table, Nil))
 
   /** FK enforcement against the LOADED parents (the REFERENCES analog,
     * ddl_tienda_pago_bi.sql:33,40-42 — Postgres rejects an insert whose

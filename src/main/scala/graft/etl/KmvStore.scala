@@ -93,8 +93,7 @@ final class KmvStore(spark: SparkSession, storeDir: String,
   /** Merge-on-compact ([[DfStore.compact]] discipline): rewrite the
     * per-ingest appends into the merged ≤ |groups|·k frame via the
     * shared verified swap. Returns (files before, files after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
+  def compact(): (Long, Long) =
     ParquetStore.compact(spark, storeDir,
-      sketches.select(col("grp"), col("h").as("h", shapeMeta)),
-      targetFileBytes)
+      sketches.select(col("grp"), col("h").as("h", shapeMeta)))
 }

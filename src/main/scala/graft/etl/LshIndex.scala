@@ -99,7 +99,6 @@ final class LshIndex(spark: SparkSession, storeDir: String,
 
   /** Rewrite accumulated appends into sized files — the shared
     * [[ParquetStore.compact]] swap. Returns (files before, after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, storedSignatures,
-      targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, storedSignatures)
 }

@@ -89,8 +89,8 @@ final class NoveltyStore(spark: SparkSession, storeDir: String) {
     * the pre-r8 in-place rewrite read through non-replicated
     * localCheckpoint blocks, so an executor loss mid-write destroyed
     * the store on a real cluster), then swapped in with two renames.
-    * File count is size-aware (`ceil(bytes / targetFileBytes)`,
-    * IncrementalSink.compact's rule) — the store is the corpus's
+    * File count is size-aware (`ceil(bytes / 128 MiB)`, the shared
+    * [[ParquetStore.compact]] rule) — the store is the corpus's
     * distinct shingle vocabulary, billions of rows at 100 TB, and a
     * single-task `coalesce(1)` rewrite would both serialize the job
     * and emit one giant file.
@@ -100,6 +100,6 @@ final class NoveltyStore(spark: SparkSession, storeDir: String) {
     * with the store missing (died between renames) → old restored;
     * `.compact_old` beside a live store (died before cleanup) →
     * leftover deleted. Returns (files before, files after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, seenShingles, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, seenShingles)
 }

@@ -1,20 +1,21 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Shared durability discipline for append-only parquet STORES (the
   * novelty shingle store, the LSH signature index): `_SUCCESS`-gated
   * validity, and the temp-path-then-verified-swap compaction whose
   * rename handling treats `FileSystem.rename` as what it is on HDFS —
   * an operation that reports most failures by RETURNING FALSE, not by
-  * throwing. Extracted from [[NoveltyStore]] so every store shares one
-  * audited copy of the crash-window logic instead of re-growing its
-  * own.
+  * throwing. Every store and the warehouse sink ([[IncrementalSink]])
+  * share this one audited copy of the crash-window logic instead of
+  * re-growing their own.
   */
 private[etl] object ParquetStore {
 
-  private def hfs(spark: SparkSession, p: Path) =
+  def hfs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** True iff the store directory holds committed data: data files
@@ -58,33 +59,46 @@ private[etl] object ParquetStore {
     }
   }
 
+  /** Size one compacted file aims for. */
+  private val TargetFileBytes = 128L << 20
+
   /** Rewrite the accumulated per-batch appends into few SIZED files
-    * (`ceil(bytes / targetFileBytes)` — a single-task `coalesce(1)`
-    * rewrite would both serialize the job and emit one giant file).
-    * The compacted copy goes to a TEMP directory off the live store,
-    * then swaps in with two VERIFIED renames; `old` (the last complete
-    * copy until the swap proves itself) is only deleted once the live
-    * path exists and lists committed parquet files. Crash windows
-    * self-heal on the next call: stale `.compact_tmp` → deleted;
-    * `.compact_old` with the store missing (died between renames) →
-    * old restored; `.compact_old` beside a live store → leftover
-    * deleted. Returns (files before, files after). */
+    * (`ceil(bytes / 128 MiB)` — a single-task `coalesce(1)` rewrite
+    * would both serialize the job and emit one giant file). A table
+    * with `partCols` is co-partitioned by them and rewritten with the
+    * same `partitionBy` layout, so each task writes few directories
+    * and partition pruning survives. The compacted copy goes to a TEMP
+    * directory off the live store, then swaps in with two VERIFIED
+    * renames; `old` (the last complete copy until the swap proves
+    * itself) is only deleted once the live path exists and holds
+    * committed parquet files (at any depth — partition directories
+    * count). Crash windows self-heal on the next call: stale
+    * `.compact_tmp` → deleted; `.compact_old` with the store missing
+    * (died between renames) → old restored; `.compact_old` beside a
+    * live store → leftover deleted. Returns (files before, files
+    * after). */
   def compact(spark: SparkSession, storeDir: String, read: => DataFrame,
-      targetFileBytes: Long): (Long, Long) = {
+      partCols: Seq[String] = Nil): (Long, Long) = {
     val store = new Path(storeDir)
     val fs = hfs(spark, store)
     val tmp = new Path(storeDir + ".compact_tmp")
     val old = new Path(storeDir + ".compact_old")
+    def parquetFiles(p: Path): Seq[FileStatus] =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.flatMap { s =>
+        if (s.isDirectory) parquetFiles(s.getPath)
+        else if (s.getPath.getName.endsWith(".parquet")) Seq(s)
+        else Nil
+      }
+    // committed = _SUCCESS marker plus at least one parquet data file
+    def committed(p: Path): Boolean =
+      fs.exists(new Path(p, "_SUCCESS")) && parquetFiles(p).nonEmpty
     // heal any crash window of a previous run (see scaladoc)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) {
-      // committed = _SUCCESS marker plus at least one parquet data file;
-      // a store that exists but fails this check is the post-swap
+      // a store that exists but is not committed is the post-swap
       // verification-failure window whose message promised the previous
       // copy stays at old — deleting old here would lose that copy.
-      def committed(p: Path): Boolean =
-        fs.exists(new Path(p, "_SUCCESS")) && fs.listStatus(p).toSeq
-          .exists(_.getPath.getName.endsWith(".parquet"))
       if (!fs.exists(store)) { // mid-swap crash: restore the last copy
         if (!fs.rename(old, store)) throw new java.io.IOException(
           s"compact: healing rename $old -> $store failed; the last " +
@@ -98,16 +112,15 @@ private[etl] object ParquetStore {
             "complete copy is still at the .compact_old path")
       }
     }
-    def parquetFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
     val before = parquetFiles(store)
     val totalBytes = before.map(_.getLen).sum
     val nFiles = math.max(1L,
-      (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    read.repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      (totalBytes + TargetFileBytes - 1) / TargetFileBytes).toInt
+    val w =
+      if (partCols.isEmpty) read.repartition(nFiles).write
+      else read.repartition(nFiles, partCols.map(col): _*).write
+        .partitionBy(partCols: _*)
+    w.mode(SaveMode.Overwrite).parquet(tmp.toString)
     def renameOrDie(src: Path, dst: Path): Unit =
       if (!fs.rename(src, dst)) throw new java.io.IOException(
         s"compact: rename $src -> $dst failed (FileSystem returned " +

@@ -84,8 +84,8 @@ final class CmsStore(spark: SparkSession, storeDir: String,
 
   /** Merge-on-compact: rewrite the appends into the single merged
     * grid via the shared verified swap. Returns (files before, after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, sketch, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, sketch)
 }
 
 /** HLL register store — see [[CmsStore]]'s scaladoc for the shared
@@ -148,10 +148,10 @@ final class HllStore(spark: SparkSession, storeDir: String,
     Sketch.hllEstimateFromRegisters(registers, groupCol, m, wBits)
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) = {
+  def compact(): (Long, Long) = {
     val merged = registers
       .select(col(groupCol), col("b"), col("mj").as("mj", shapeMeta))
-    ParquetStore.compact(spark, storeDir, merged, targetFileBytes)
+    ParquetStore.compact(spark, storeDir, merged)
   }
 }
 
@@ -219,9 +219,9 @@ final class GridStore(spark: SparkSession, storeDir: String,
   }
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) = {
+  def compact(): (Long, Long) = {
     val merged = bins.select(col("bin"), col("n").as("n", widthMeta))
-    ParquetStore.compact(spark, storeDir, merged, targetFileBytes)
+    ParquetStore.compact(spark, storeDir, merged)
   }
 }
 
@@ -321,11 +321,11 @@ final class BloomStore(spark: SparkSession, storeDir: String,
 
   /** Merge-on-compact: rewrite the appends into ONE merged row via
     * the shared verified swap. Returns (files before, after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) = {
+  def compact(): (Long, Long) = {
     import spark.implicits._
     val merged = Seq(Tuple1(filterBytes())).toDF("bf")
       .select(col("bf").as("bf", shapeMeta))
-    ParquetStore.compact(spark, storeDir, merged, targetFileBytes)
+    ParquetStore.compact(spark, storeDir, merged)
   }
 }
 
@@ -389,7 +389,7 @@ final class TrendStore(spark: SparkSession, storeDir: String) {
       horizonDays)
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, dailyCounts, targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, dailyCounts)
 }
 

@@ -80,7 +80,6 @@ final class WinnowIndex(spark: SparkSession, storeDir: String,
 
   /** Rewrite accumulated appends into sized files — the shared
     * [[ParquetStore.compact]] swap. Returns (files before, after). */
-  def compact(targetFileBytes: Long = 128L << 20): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, storedFingerprints,
-      targetFileBytes)
+  def compact(): (Long, Long) =
+    ParquetStore.compact(spark, storeDir, storedFingerprints)
 }

@@ -826,163 +826,72 @@ object Dedup {
   /** Near-dup CLUSTERS from a pair list — the step that turns pairwise
     * similarity into an actual dedup decision. Connected components by
     * min-id label propagation: every doc starts as its own label; each
-    * iteration every doc takes the min label among itself and its
-    * neighbors; fixpoint = the component's min doc id. Iteration count
+    * pass every doc takes the min label among itself and its
+    * neighbors; fixpoint = the component's min doc id. The pass count
     * is the cluster DIAMETER — near-dup clusters are shallow (dups of
-    * a common source), so a handful of passes closes them; the hard
-    * cap exists so pathological chains fail loudly instead of looping.
+    * a common source), so a handful of passes closes them; the
+    * `maxIters` cap exists so pathological chains fail loudly instead
+    * of looping.
     *
-    * Scale shape: each pass is one join on the edge key + one groupBy
-    * — all shuffle-on-key, no driver data; lineage is cut per pass
-    * with localCheckpoint so the plan doesn't grow with iterations.
-    * `docs` supplies the universe: documents in no pair come out as
-    * their own singleton cluster.
+    * The loop is a DELTA FRONTIER over co-partitioned RDDs — the
+    * procedural half of the relational/procedural split, where an
+    * iterative fixpoint wants it:
+    *  - ONE Spark job with ONE shuffle per pass. Edges, labels and the
+    *    merge join share one HashPartitioner, so the per-pass join and
+    *    the fold are narrow; only the neighbor messages are shuffled.
+    *    (A DataFrame pass under AQE materializes every exchange as its
+    *    own driver-blocking job, and on small graphs that driver
+    *    latency, not bytes, was the cost.)
+    *  - From pass 2 on, only labels that CHANGED last pass send
+    *    messages. Identical labels by induction: an unchanged
+    *    neighbor's label was already sent (and absorbed) the pass
+    *    after it last changed. On deep chains the frontier shrinks to
+    *    the chain tips, so total message volume is O(|V|) across ALL
+    *    passes instead of O(passes·|E|).
+    *  - No Catalyst planning or plan-string render per pass, so the
+    *    plan does not grow with the iteration count.
+    *  - Convergence is free: a pass's change count rides the pass job
+    *    in an accumulator. Task retries can only over-count, which at
+    *    worst schedules one provably quiet extra pass — never a
+    *    premature stop. An id first reached through a neighbor (a pair
+    *    endpoint outside `docs`) counts as changed, so propagation
+    *    through such chains is never truncated.
     *
-    * Driver-barrier diet (r22 — under AQE every exchange materializes
-    * as its own driver-blocking stage, and the measured clip-rung cost
-    * was BARRIERS, not bytes):
-    *  - the convergence check is FREE: an always-true non-deterministic
-    *    filter under the per-pass checkpoint counts changed rows (new
-    *    label < carried `prev`, or `prev` null — the id first appeared
-    *    this pass) into an accumulator while the pass job materializes.
-    *    Retried/speculative tasks can only over-count, which at worst
-    *    schedules one extra (then provably quiet) pass — never a
-    *    premature stop. The r21 `isEmpty` probe was a separate job per
-    *    pass (plus its take(1) partition escalation on the final,
-    *    empty check). `uncheckedIters` is retained for source
-    *    compatibility and ignored — there is no check job left to skip;
-    *  - the init checkpoint of the trivial (id, id) projection is gone:
-    *    pass 1 carries `docs` in two branches, whose identical exchange
-    *    subtrees run once (ReuseExchange).
+    * Measured and rejected: POINTER JUMPING (an L(L(x)) step per
+    * pass). Labels point to the MIN-id member, whose position along a
+    * chain is arbitrary, so the jump does not reliably double coverage
+    * the way it does on a monotone-id chain; on deep clip rep-graphs it
+    * cut passes only 13 → 10 while adding two label shuffles per pass
+    * — more shuffles in total, slower, and more bytes at scale.
     *
-    * `checkpointDir` picks the lineage-cut durability: None (default)
-    * uses `localCheckpoint` — blocks are non-replicated executor state,
-    * right for single-JVM runs but a lost executor kills the iteration
-    * on a cluster; Some(dir) sets the SparkContext checkpoint dir and
-    * uses reliable `checkpoint()` (HDFS-backed on a cluster), the
-    * long-run multi-executor mode.
+    * Width follows the data: the pair frame's own partition count,
+    * capped at the cluster's total cores. Pass state is persisted
+    * MEMORY_AND_DISK; a lost block recomputes from lineage, whose depth
+    * is bounded by `maxIters`.
+    *
+    * Ids are `LongType` — every corpus, cluster and fingerprint key is
+    * an int64; other id types fail fast rather than being cast. `docs`
+    * supplies the universe: documents in no pair come out as their own
+    * singleton cluster; null ids fail loudly.
     *
     * Output: (doc_id, cluster_id, is_canonical) — canonical = the
     * cluster's min id, the keep-first rule the reference's dedup uses
     * (transform.py:79 semantics lifted to near-dup groups). */
   def nearDupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 20, uncheckedIters: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
-    // Long-id local mode takes the delta-frontier RDD loop (r22): one
-    // job and one shuffle per pass instead of the DataFrame pass's
-    // 3-4 AQE materialization jobs, and from pass 2 on only CHANGED
-    // labels cross the wire. Every production caller keys on long ids;
-    // the generic DataFrame loop below stays the fallback (other id
-    // types, and the reliable-checkpoint cluster mode whose recovery
-    // story is per-pass checkpoint files).
-    val longType = org.apache.spark.sql.types.LongType
-    if (checkpointDir.isEmpty &&
-        docs.schema(idCol).dataType == longType &&
-        pairs.schema("doc_a").dataType == longType &&
-        pairs.schema("doc_b").dataType == longType)
-      return nearDupClustersLong(docs, idCol, pairs, maxIters)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() // eager, reliable
-      else df.localCheckpoint(true)
-    // persist the pair frame BEFORE the src/dst mirror union: its two
-    // branches otherwise re-materialize the entire upstream pair
-    // pipeline (LSH banding + cosine/jaccard verify) once each
-    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(p.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = docs.sparkSession.sparkContext
-    val idType = docs.schema(idCol).dataType
-    // the universe frame is lazy — the r21 init checkpoint of
-    // (id, id) was a whole blocking job to materialize a projection;
-    // pass 1's plan carries `docs` twice (join probe + union branch),
-    // but identical exchange subtrees are computed once (ReuseExchange)
-    var labels: DataFrame = docs.select(col(idCol).as("doc_id"),
-      col(idCol).as("cluster_id"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // min over self + neighbors' labels; the self row carries the old
-      // label in `prev` (neighbor rows carry null, ignored by min)
-      val viaNeighbors = edges
-        .join(labels.select(col("doc_id").as("src"), col("cluster_id")),
-          Seq("src"))
-        .select(col("dst").as("doc_id"), col("cluster_id"),
-          lit(null).cast(idType).as("prev"))
-      // Measured-and-rejected (r22, CcBench): POINTER JUMPING — adding
-      // an L(L(x)) branch per pass. On the deep clip rep-graphs it cut
-      // passes only 13 → 10 (labels point to the MIN-id member, whose
-      // position along the reel chain is arbitrary, so the jump does
-      // not reliably double coverage the way it does on a
-      // monotone-id chain — ChainBench closes an id-ordered 200-path
-      // in ~9 passes), while costing two extra label-frame exchanges
-      // per pass: 10×4 > 13×2 shuffles — slower at sf0.1 (7.2 vs
-      // 6.9 s on q308's closure, same-process A/B) AND more bytes at
-      // scale.
-      val changed = sc.longAccumulator("graft.neardup.changed")
-      val tick = udf((chg: java.lang.Boolean) => {
-        if (chg != null && chg.booleanValue()) changed.add(1L)
-        true
-      }).asNondeterministic()
-      // null prev = the id FIRST appeared this pass (a pair endpoint
-      // outside `docs`): that is a change, not a fixpoint — treating
-      // it as converged would truncate propagation through such chains
-      val next = cut(labels.withColumn("prev", col("cluster_id"))
-        .unionByName(viaNeighbors)
-        .groupBy(col("doc_id"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          min(col("prev")).as("prev"))
-        .where(tick(col("prev").isNull || col("cluster_id") < col("prev")))
-        .select(col("doc_id"), col("cluster_id")))
-      iter += 1
-      converged = changed.value == 0L
-      labels = next
-    }
-    edges.unpersist(); p.unpersist() // before the require — no leak on the failure path
-    if (sys.props.contains("graft.dev.logPasses"))
-      println(s"[ndc] passes=$iter converged=$converged")
-    require(converged, s"label propagation did not converge in $maxIters passes")
-    labels.select(col("doc_id"), col("cluster_id"),
-      (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Long-id fast path of [[nearDupClusters]] — the same min-label
-    * propagation, restructured as a DELTA-FRONTIER loop over
-    * co-partitioned RDDs (r22, the clip-rung barrier fix):
-    *
-    *  - ONE Spark job with ONE shuffle per pass. The DataFrame pass
-    *    under AQE materializes every exchange as its own
-    *    driver-blocking job (JobAudit measured q308 at 83 jobs for
-    *    ~2.5 s of summed stage time — the other half of its wall was
-    *    inter-job driver latency). Here edges, labels and the merge
-    *    join all share one HashPartitioner, so the per-pass join and
-    *    the fold are narrow; only the neighbor messages are shuffled.
-    *  - From pass 2 on, only labels that CHANGED last pass send
-    *    messages (guide §2.3 — shuffle fewer bytes). Identical labels
-    *    by induction: an unchanged neighbor's label was already sent
-    *    (and absorbed) the pass after it last changed. On the deep
-    *    clip rep-graphs (13-pass paths along reels) the frontier
-    *    shrinks to the two chain tips, so total message volume is
-    *    O(|V|) across ALL passes instead of O(passes·|E|).
-    *  - No Catalyst planning, canonicalization or plan-string render
-    *    per pass — the r20-r22 giant-plan-lineage class of cost is
-    *    structurally absent.
-    *
-    * Convergence and pass count are bit-identical to the DataFrame
-    * loop: a pass's change count rides the pass job via an
-    * accumulator (task retries can only over-count — at worst one
-    * provably-quiet extra pass), and an id first reached through a
-    * neighbor counts as changed, exactly the `prev IS NULL` rule. */
-  private def nearDupClustersLong(docs: DataFrame, idCol: String,
-      pairs: DataFrame, maxIters: Int): DataFrame = {
+      maxIters: Int = 20): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    Seq(docs -> idCol, pairs -> "doc_a", pairs -> "doc_b").foreach {
+      case (df, c) =>
+        val t = df.schema(c).dataType
+        require(t == LongType,
+          s"nearDupClusters: id column '$c' is $t, expected LongType")
+    }
     val spark = docs.sparkSession
     val sc = spark.sparkContext
-    def toLong(r: org.apache.spark.sql.Row, i: Int, what: String): Long = {
+    def toLong(r: Row, i: Int, what: String): Long = {
       require(!r.isNullAt(i), s"nearDupClusters: null $what id")
       r.getLong(i)
     }
@@ -991,22 +900,13 @@ object Dedup {
         val a = toLong(r, 0, "pair"); val b = toLong(r, 1, "pair")
         Iterator((a, b), (b, a))
       }
-    // scale-adaptive width, never a local constant: inherit the pair
-    // frame's own (AQE-coalesced) width — at bench scale that is a
-    // handful of partitions, on a cluster it grows with the pair
-    // mass — capped at the cluster's total cores (the label/edge
-    // frames are decision-sized, so defaultParallelism keeps every
-    // core fed without over-splitting); spark.graft.neardup.parts
-    // overrides for deployments whose pair mass wants wider.
-    val nParts = spark.conf.getOption("spark.graft.neardup.parts")
-      .map(_.toInt)
-      .getOrElse(math.min(math.max(1, sc.defaultParallelism),
-        math.max(1, mirrored.getNumPartitions)))
-    val part = new HashPartitioner(nParts)
+    val part = new HashPartitioner(math.min(
+      math.max(1, sc.defaultParallelism),
+      math.max(1, mirrored.getNumPartitions)))
     val edges = mirrored.partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // L0(x) = x; dedup repeated universe rows like the DataFrame
-    // loop's first groupBy did
+    // L0(x) = x over the deduplicated universe; every label starts as
+    // a change so pass 1 sends all of them
     val init: RDD[(Long, (Long, Boolean))] = docs.select(col(idCol))
       .rdd.map(r => (toLong(r, 0, "doc"), ()))
       .reduceByKey(part, (a, _) => a)
@@ -1030,8 +930,7 @@ object Dedup {
             case (Some(o), Some(m)) => math.min(o, m)
             case (Some(o), None) => o
             // first reached through a neighbor: the neighbor's label
-            // (never the own id — the DataFrame loop's semantics),
-            // and always a change
+            // (never the own id), and always a change
             case (None, Some(m)) => m
             case (None, None) => sys.error("unreachable: fullOuterJoin")
           }
@@ -1047,18 +946,11 @@ object Dedup {
       converged = changed.value == 0L
     }
     edges.unpersist(false)
-    if (sys.props.contains("graft.dev.logPasses"))
-      println(s"[ndc-rdd] passes=$iter converged=$converged")
     require(converged,
       s"label propagation did not converge in $maxIters passes")
-    val rows = merged.map { case (id, (lbl, _)) =>
-      org.apache.spark.sql.Row(id, lbl)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("cluster_id",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+    val rows = merged.map { case (id, (lbl, _)) => Row(id, lbl) }
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("cluster_id", LongType)))
     spark.createDataFrame(rows, schema)
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).as("is_canonical"))

@@ -76,14 +76,6 @@ object DevQ {
       time("q17 text ngram-jaccard pairs") {
         noop(graft.queries.Ext.q17.run(spark, sfDir))
       }
-      // ---- label propagation fixed cost on a tiny graph ----
-      time("closure: 450-node chain graph") {
-        import spark.implicits._
-        val pairs = (0L until 450L).map(i => (i, i + 1L))
-          .toDF("doc_a", "doc_b")
-        val nodes = (0L to 450L).toDF("doc_id")
-        noop(Dedup.nearDupClusters(nodes, "doc_id", pairs, maxIters = 20))
-      }
     }
     spark.stop()
   }

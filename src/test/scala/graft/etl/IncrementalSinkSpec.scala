@@ -220,26 +220,49 @@ class IncrementalSinkSpec extends SparkSpec {
 
   test("compact heals every crash window of a previous run") {
     import java.nio.file.Paths
-    val whDir = Files.createTempDirectory("graft_sink_crash").toString
-    val sink = new IncrementalSink(spark, whDir, partitioning = Map.empty)
-    sink.appendOnlyNew(df(Row(1, "a"), Row(2, "b")), "t", "pk")
-    val dir = Paths.get(s"$whDir/t")
-    val tmp = Paths.get(s"$whDir/t.compact_tmp")
-    val old = Paths.get(s"$whDir/t.compact_old")
-    // window 1: stale tmp from a run that died mid-write
-    Files.createDirectories(tmp)
-    Files.write(tmp.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-    sink.compact("t")
-    assert(!Files.exists(tmp) && !Files.exists(old))
-    assert(sink.read("t").count() == 2)
-    // window 2: died between the moves — table dir GONE, data only in old
-    Files.move(dir, old)
-    sink.compact("t")
-    assert(sink.read("t").count() == 2 && !Files.exists(old))
-    // window 3: died after the swap, before cleanup — stale old beside live
-    Files.createDirectories(old)
-    Files.write(old.resolve("leftover.parquet"), Array[Byte](1))
-    sink.compact("t")
-    assert(sink.read("t").count() == 2 && !Files.exists(old))
+    // unpartitioned, and partitioned with a null key: the rewrite keeps
+    // the layout and the null row's __HIVE_DEFAULT_PARTITION__ directory
+    // counts as committed data
+    for (partCols <- Seq(Nil, Seq("v"))) {
+      val whDir = Files.createTempDirectory("graft_sink_crash").toString
+      val sink = new IncrementalSink(spark, whDir,
+        partitioning = Map("t" -> partCols))
+      sink.appendOnlyNew(df(Row(1, "a"), Row(2, null)), "t", "pk")
+      val dir = Paths.get(s"$whDir/t")
+      val tmp = Paths.get(s"$whDir/t.compact_tmp")
+      val old = Paths.get(s"$whDir/t.compact_old")
+      // window 1: stale tmp from a run that died mid-write
+      Files.createDirectories(tmp)
+      Files.write(tmp.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
+      sink.compact("t")
+      assert(!Files.exists(tmp) && !Files.exists(old))
+      assert(sink.read("t").count() == 2)
+      // window 2: died between the moves — table dir GONE, data only in old
+      Files.move(dir, old)
+      sink.compact("t")
+      assert(sink.read("t").count() == 2 && !Files.exists(old))
+      // window 3: died after the swap, before cleanup — stale old beside live
+      Files.createDirectories(old)
+      Files.write(old.resolve("leftover.parquet"), Array[Byte](1))
+      sink.compact("t")
+      assert(sink.read("t").count() == 2 && !Files.exists(old))
+      if (partCols.nonEmpty)
+        assert(Files.exists(dir.resolve("v=__HIVE_DEFAULT_PARTITION__")))
+    }
+  }
+
+  test("a file: URI warehouse keeps earlier days across incremental loads") {
+    val whDir = Files.createTempDirectory("graft_sink_uri").toString
+    val sink = new IncrementalSink(spark, s"file://$whDir")
+    assert(sink.appendOnlyNew(df(Row(1, "a"), Row(2, "b")), "t", "pk")
+      == (2L, 0L))
+    assert(sink.exists("t"))
+    assert(sink.appendOnlyNew(df(Row(2, "b"), Row(3, "c")), "t", "pk")
+      == (1L, 1L))
+    assert(sink.read("t").collect().map(_.getInt(0)).sorted.toSeq
+      == Seq(1, 2, 3)) // day 1's rows survive day 2's load
+    val (nBefore, _) = sink.compact("t")
+    assert(nBefore >= 2) // compaction sees the table, too
+    assert(sink.read("t").count() == 3)
   }
 }

@@ -54,7 +54,7 @@ class LshIndexSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     idx.probeAndRecord(docs.where(col("doc_id") < 100), "doc_id", "text")
     val before = idx.storedSignatures.count()
-    idx.compact(targetFileBytes = 1L << 20)
+    idx.compact()
     assert(idx.storedSignatures.count() == before)
     // post-compact probe still sees the store
     val p = idx.probeAndRecord(

@@ -29,7 +29,7 @@ class SketchStoreSpec extends SparkSpec {
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     val oneShot = grid(Sketch.cmBuild(hashes, "h", width = 64))
     assert(grid(store.sketch) == oneShot)
-    val (before, after) = store.compact(targetFileBytes = 1L << 20)
+    val (before, after) = store.compact()
     assert(before > after, s"compact $before -> $after files")
     assert(grid(store.sketch) == oneShot) // merge-on-compact loses nothing
     // estimates against the store keep the never-undercount guarantee
@@ -70,7 +70,7 @@ class SketchStoreSpec extends SparkSpec {
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(stored == direct)
     // compact merges to one row per (group, bucket) and keeps results
-    store.compact(targetFileBytes = 1L << 20)
+    store.compact()
     assert(regs(store.registers) == oneShot)
   }
 
@@ -111,7 +111,7 @@ class SketchStoreSpec extends SparkSpec {
     val oneShot = ans(graft.operators.Profiling.gridPercentile(
       values, "v", width = 0.5, ps = ps))
     assert(ans(store.percentiles(ps)) == oneShot)
-    val (before, after) = store.compact(targetFileBytes = 1L << 20)
+    val (before, after) = store.compact()
     assert(before > after, s"compact $before -> $after files")
     assert(ans(store.percentiles(ps)) == oneShot)
   }
@@ -158,7 +158,7 @@ class SketchStoreSpec extends SparkSpec {
     assert(java.util.Arrays.equals(store.filterBytes(), one.filterBytes()))
     // compact: 3 appended blobs -> 1, bits identical
     val bytesBefore = store.filterBytes()
-    val (before, after) = store.compact(targetFileBytes = 1L << 20)
+    val (before, after) = store.compact()
     assert(before > after, s"compact $before -> $after files")
     assert(java.util.Arrays.equals(store.filterBytes(), bytesBefore))
     // no false negatives: every ingested key probes true; a disjoint
@@ -213,7 +213,7 @@ class SketchStoreSpec extends SparkSpec {
     val oneShot = fit(Trend.olsTrend(frame(all), col("k"), col("day")))
     assert(fit(store.slopes) == oneShot)
     assert(oneShot("A") == ((5L, Some(1.0)))) // the clean ramp, exactly
-    val (before, after) = store.compact(targetFileBytes = 1L << 20)
+    val (before, after) = store.compact()
     assert(before > after)
     assert(fit(store.slopes) == oneShot)
     // CLI core

@@ -46,7 +46,7 @@ class WinnowIndexSpec extends SparkSpec {
     assert(p1 ++ p2 == ref)
     // every cross-batch pair (earlier doc in batch 1) appears in p2
     assert(p2.keys.exists { case (a, b) => a < cut && b >= cut })
-    val (before, after) = idx.compact(targetFileBytes = 1L << 20)
+    val (before, after) = idx.compact()
     assert(before > after, s"compact $before -> $after files")
     // a fresh doc probing after compact still sees the whole store
     val probe = idx.storedFingerprints.count()

@@ -68,30 +68,23 @@ class DedupSpec extends SparkSpec {
   }
 
   test("convergence is correct when the first check lands past the fixpoint") {
-    // a single edge converges in 1 pass; with uncheckedIters = 5 the
-    // first check runs at pass 5 and must still report the fixpoint
+    // a single edge converges in 1 pass; the quiet second pass must
+    // still report the fixpoint
     val out = Dedup.nearDupClusters(docs(1, 2, 3), "doc_id",
-      pairs(1L -> 2L), maxIters = 8, uncheckedIters = 5)
+      pairs(1L -> 2L), maxIters = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 3L)))
   }
 
-  test("reliable-checkpoint mode (checkpointDir) propagates identically") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ndc_ckpt").toString
-    val out = Dedup.nearDupClusters(
-      docs(1, 2, 3, 4, 5, 6, 7), "doc_id",
-      pairs(1L -> 2L, 2L -> 3L, 3L -> 4L, 5L -> 6L),
-      checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(out.toSeq == Seq(
-      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (4L, 1L, false),
-      (5L, 5L, true), (6L, 5L, false),
-      (7L, 7L, true)))
-    // reliable mode actually wrote RDD checkpoint data to the dir
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, s"no checkpoint files under $dir")
+  test("non-long ids are rejected, naming the column") {
+    val intDocs = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1), Row(2)), 2),
+      StructType(Seq(StructField("doc_id", IntegerType))))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.nearDupClusters(intDocs, "doc_id", pairs(1L -> 2L))
+    }
+    assert(e.getMessage.contains("'doc_id'") &&
+      e.getMessage.contains("IntegerType"), e.getMessage)
   }
 
   private def textDocs(rows: (Long, String)*) = {

@@ -5,9 +5,10 @@ import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.monotonically_increasing_id
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.GraftSession
-import graft.etl.{EtlJob, IncrementalSink, Report, VariosSplitter}
+import graft.etl.{EtlJob, IncrementalSink, Report, StarSchema, VariosSplitter}
 import graft.sources.{CsvSource, ExcelSource, JsonArraySource, Source, Xlsx}
 
 /** The spark-submit-able entry point (SURVEY.md §3.3): one binary with
@@ -1296,8 +1297,23 @@ object Main {
     * matches the reference reading one small JSON doc. */
   private final case class OrderedJson(path: String) extends Source {
     def load(spark: org.apache.spark.sql.SparkSession) =
-      JsonArraySource(path).load(spark)
+      JsonArraySource(path, Some(StarSchema.rawRecomendados)).load(spark)
         .withColumn("__ord", monotonically_increasing_id())
+  }
+
+  /** The declared raw transacciones schema named after `path`'s own
+    * header: the fact build renames by position and header names vary
+    * between drops, so the parse stays positional without Spark's
+    * header-mismatch warning. */
+  private def transaccionesSchema(path: String): StructType = {
+    val in = Files.newBufferedReader(Paths.get(path))
+    val header = try Option(in.readLine()).toSeq.flatMap(csvRows)
+      .headOption.getOrElse(Nil) finally in.close()
+    val raw = StarSchema.rawTransacciones
+    require(header.size == raw.size,
+      s"$path: header has ${header.size} columns, the transacciones " +
+        s"layout has ${raw.size}")
+    StructType(raw.fields.zip(header).map { case (f, n) => f.copy(name = n) })
   }
 
   /** Session-independent core of `etl` (tests drive this directly; the
@@ -1315,8 +1331,10 @@ object Main {
             .map(r => VariosSplitter.RawRow( // sheets may be < 2 cols wide
               r.lift(0).flatten, r.lift(1).flatten)))
       else
-        (CsvSource(s"$srcDir/clientes.csv"): Source,
-          CsvSource(s"$srcDir/transacciones.csv"): Source,
+        (CsvSource(s"$srcDir/clientes.csv",
+          schema = Some(StarSchema.rawClientes)): Source,
+          CsvSource(s"$srcDir/transacciones.csv", schema = Some(
+            transaccionesSchema(s"$srcDir/transacciones.csv"))): Source,
           readVarios(s"$srcDir/varios.csv"))
     val sources = EtlJob.Sources(
       clientes = clientesSrc,

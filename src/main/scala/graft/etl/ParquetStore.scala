@@ -1,8 +1,12 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared durability discipline for append-only parquet STORES (the
   * novelty shingle store, the LSH signature index): `_SUCCESS`-gated
@@ -59,6 +63,29 @@ private[etl] object ParquetStore {
     }
   }
 
+  /** The Spark schema `dir`'s data was written with, read on the
+    * driver from one data file's footer (Spark's own footer inference
+    * runs a job for this); None when there is no data file or its
+    * footer carries no Spark schema. */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val fs = hfs(spark, new Path(dir))
+    def visible(s: FileStatus) = !s.getPath.getName.startsWith("_") &&
+      !s.getPath.getName.startsWith(".")
+    def firstFile(p: Path): Option[Path] =
+      fs.listStatus(p).iterator.filter(visible).map { s =>
+        if (s.isDirectory) firstFile(s.getPath)
+        else Some(s.getPath).filter(_.getName.endsWith(".parquet"))
+      }.collectFirst { case Some(f) => f }
+    val d = new Path(dir)
+    (if (fs.exists(d)) firstFile(d) else None).flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f,
+        spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      finally r.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
+
   /** Size one compacted file aims for. */
   private val TargetFileBytes = 128L << 20
 
@@ -75,10 +102,15 @@ private[etl] object ParquetStore {
     * count). Crash windows self-heal on the next call: stale
     * `.compact_tmp` → deleted; `.compact_old` with the store missing
     * (died between renames) → old restored; `.compact_old` beside a
-    * live store → leftover deleted. Returns (files before, files
-    * after). */
+    * live store → leftover deleted. With `skipIfCompact`, for a store
+    * whose `read` is its rows as stored (a merge-on-compact store
+    * rewrites to merge rows, so it never skips), a committed store the
+    * rewrite could not shrink (at most `ceil(bytes / 128 MiB)` files,
+    * or one file per partition directory) is left unread and returns
+    * (n, n). Returns (files before, files after). */
   def compact(spark: SparkSession, storeDir: String, read: => DataFrame,
-      partCols: Seq[String] = Nil): (Long, Long) = {
+      partCols: Seq[String] = Nil, skipIfCompact: Boolean = false)
+      : (Long, Long) = {
     val store = new Path(storeDir)
     val fs = hfs(spark, store)
     val tmp = new Path(storeDir + ".compact_tmp")
@@ -116,24 +148,33 @@ private[etl] object ParquetStore {
     val totalBytes = before.map(_.getLen).sum
     val nFiles = math.max(1L,
       (totalBytes + TargetFileBytes - 1) / TargetFileBytes).toInt
-    val w =
-      if (partCols.isEmpty) read.repartition(nFiles).write
-      else read.repartition(nFiles, partCols.map(col): _*).write
-        .partitionBy(partCols: _*)
-    w.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    def renameOrDie(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst)) throw new java.io.IOException(
-        s"compact: rename $src -> $dst failed (FileSystem returned " +
-          "false); store left in a self-healing state — re-run compact()")
-    if (fs.exists(store)) renameOrDie(store, old)
-    renameOrDie(tmp, store)
-    val after = parquetFiles(store)
-    if (!fs.exists(new Path(store, "_SUCCESS")) || after.isEmpty)
-      throw new IllegalStateException(
-        s"compact: post-swap verification failed — $store lacks " +
-          "committed parquet files; previous copy preserved at " +
-          s"$old for healing")
-    if (fs.exists(old)) fs.delete(old, true)
-    (before.size.toLong, after.size.toLong)
+    // the rewrite writes nFiles files, or one per partition directory
+    // (each partition value hashes to one task)
+    val alreadyCompact = skipIfCompact && before.nonEmpty &&
+      fs.exists(new Path(store, "_SUCCESS")) && (
+        if (partCols.isEmpty) before.size <= nFiles
+        else before.groupBy(_.getPath.getParent).values.forall(_.size == 1))
+    if (alreadyCompact) (before.size.toLong, before.size.toLong)
+    else {
+      val w =
+        if (partCols.isEmpty) read.repartition(nFiles).write
+        else read.repartition(nFiles, partCols.map(col): _*).write
+          .partitionBy(partCols: _*)
+      w.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      def renameOrDie(src: Path, dst: Path): Unit =
+        if (!fs.rename(src, dst)) throw new java.io.IOException(
+          s"compact: rename $src -> $dst failed (FileSystem returned " +
+            "false); store left in a self-healing state — re-run compact()")
+      if (fs.exists(store)) renameOrDie(store, old)
+      renameOrDie(tmp, store)
+      val after = parquetFiles(store)
+      if (!fs.exists(new Path(store, "_SUCCESS")) || after.isEmpty)
+        throw new IllegalStateException(
+          s"compact: post-swap verification failed — $store lacks " +
+            "committed parquet files; previous copy preserved at " +
+            s"$old for healing")
+      if (fs.exists(old)) fs.delete(old, true)
+      (before.size.toLong, after.size.toLong)
+    }
   }
 }

@@ -67,8 +67,8 @@ final case class InlineRowsSource(rows: Seq[Row], schema: StructType)
 
 /** JDBC table scan (SURVEY §2.1 S4; /root/reference/src/load.py:7-18
   * reads `SELECT {pk} FROM {table}` from Postgres). `keys` is the
-  * column-pruned existing-PK read the incremental load pairs with a
-  * left_anti join — pushdown sends only the key column over the wire.
+  * column-pruned existing-PK read the incremental load joins against —
+  * pushdown sends only the key column over the wire.
   *
   * Runtime-exercised against embedded Apache Derby (which ships in the
   * Spark distribution's jars): JdbcSpec drives load/keys/append and the
@@ -96,9 +96,8 @@ final case class JdbcSource(url: String, table: String,
 }
 
 /** JDBC append writer (SURVEY §2.1 S5; load.py:40,58 —
-  * `to_sql(if_exists='append')`). Append-only like the reference:
-  * the insert-if-absent logic stays in the caller's anti-join
-  * (IncrementalSink semantics), never an UPDATE/MERGE. */
+  * `to_sql(if_exists='append')`). Append-only like the reference: never
+  * an UPDATE/MERGE. */
 object JdbcSink {
   def append(df: DataFrame, url: String, table: String,
       properties: Map[String, String] = Map.empty): Unit =
@@ -109,49 +108,24 @@ object JdbcSink {
 
   /** Insert-if-absent against a live JDBC table — the reference's exact
     * serving flow (load.py:13-14 reads existing PKs, :40,58 appends only
-    * absent rows), with the same contract as the parquet
-    * `IncrementalSink.appendOnlyNew`:
-    *  - never update — re-sent changed rows are silently ignored;
-    *  - within-batch PK uniqueness ENFORCED (the remote DDL's PK
-    *    constraint would reject the load anyway — failing before any
-    *    row lands keeps the append all-or-nothing at the batch level);
-    *  - null-PK rows always pass the anti-join (pandas `~isin` parity);
-    *  - the fresh set is materialized (eager localCheckpoint) BEFORE the
-    *    append so no executor re-evaluates a plan that reads the very
-    *    table being written (persist would be best-effort, not a
-    *    barrier).
-    * Scale: existing keys arrive as a column-pruned distributed JDBC
-    * scan partitioned by the usual jdbc options (partitionColumn /
-    * numPartitions in `properties`), anti-joined without driver
-    * involvement — the reference's driver-side Python `set` is the one
-    * thing this must never recreate.
-    * Returns (inserted, ignored) — load.py:53-57's accounting. */
+    * absent rows) through the same [[InsertIfAbsent]] pass as the
+    * parquet warehouse sink. Within-batch PK uniqueness is enforced
+    * before any row lands (the remote PK constraint would reject the
+    * load anyway). Existing keys arrive as a column-pruned distributed
+    * JDBC scan (partitionColumn / numPartitions in `properties`) and
+    * are joined without driver involvement — the reference's
+    * driver-side Python `set` is the one thing this must never
+    * recreate. Returns (inserted, ignored). */
   def appendOnlyNew(spark: SparkSession, df: DataFrame, url: String,
       table: String, pkCol: String,
       properties: Map[String, String] = Map.empty): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
-    val acct = df.agg(count(lit(1)), count(col(pkCol)),
-      countDistinct(col(pkCol))).head()
-    val incomingCount = acct.getLong(0)
-    val dupes = acct.getLong(1) - acct.getLong(2)
-    require(dupes == 0L,
-      s"jdbc table '$table': incoming batch carries $dupes duplicate " +
-        s"non-null '$pkCol' rows; the never-update sink refuses ambiguous " +
-        s"batches — dedup upstream (Transform.dedupKeepFirst) where row " +
-        s"order exists")
     val src = JdbcSource(url, table, properties)
-    if (!src.tableExists(spark)) {
-      append(df, url, table, properties)
-      (incomingCount, 0L)
-    } else {
-      val fresh = df.join(src.keys(spark, pkCol), Seq(pkCol), "left_anti")
-        .localCheckpoint(true)
-      val freshCount = fresh.count() // served from checkpointed blocks
-      if (freshCount > 0)
-        append(fresh.select(df.columns.map(col).toIndexedSeq: _*),
-          url, table, properties)
-      (freshCount, incomingCount - freshCount)
-    }
+    InsertIfAbsent(df, s"jdbc table '$table'", pkCol, new KeyedStore {
+      def exists: Boolean = src.tableExists(spark)
+      def keys(pkCol: String): DataFrame = src.keys(spark, pkCol)
+      def append(rows: DataFrame): Unit =
+        JdbcSink.append(rows, url, table, properties)
+    })
   }
 }
 

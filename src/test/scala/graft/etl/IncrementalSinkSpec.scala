@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -264,5 +266,124 @@ class IncrementalSinkSpec extends SparkSpec {
     val (nBefore, _) = sink.compact("t")
     assert(nBefore >= 2) // compaction sees the table, too
     assert(sink.read("t").count() == 3)
+  }
+
+  // -- the single pass keeps the per-check semantics of separate checks
+
+  /** A sink whose fact declares one FK (to dim_sedes) and a VARCHAR(5)
+    * column `v`. */
+  private def checkedSink() = new IncrementalSink(spark,
+    Files.createTempDirectory("graft_sink_checks").toString,
+    partitioning = Map.empty,
+    varcharLimits = Map("fct_transacciones" -> Map("v" -> 5)),
+    foreignKeys = Map("fct_transacciones" ->
+      Seq(("id_sede", "dim_sedes", "id_sede"))))
+  private val fctSchema = StructType(Seq(
+    StructField("id_trx", IntegerType), StructField("id_sede", IntegerType),
+    StructField("v", StringType)))
+  private def fct(rows: Row*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(rows, 2), fctSchema)
+  private def sedes(ids: Int*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(ids.map(Row(_)), 1),
+    StructType(Seq(StructField("id_sede", IntegerType))))
+
+  test("an over-wide VARCHAR on an ignored re-sent row passes; on a fresh row it fails") {
+    val sink = new IncrementalSink(spark,
+      Files.createTempDirectory("graft_sink_vcig").toString,
+      partitioning = Map.empty,
+      varcharLimits = Map("t" -> Map("v" -> 5)))
+    sink.appendOnlyNew(df(Row(1, "a")), "t", "pk")
+    // row 1 is re-sent with a value the DDL would reject: it is never
+    // written, so the batch loads
+    assert(sink.appendOnlyNew(df(Row(1, "much too long"), Row(2, "b")),
+      "t", "pk") == (1L, 1L))
+    val e = intercept[IllegalArgumentException] {
+      sink.appendOnlyNew(df(Row(1, "much too long"), Row(3, "toolong")),
+        "t", "pk")
+    }
+    assert(e.getMessage.contains("exceeds VARCHAR(5)"))
+    assert(sink.read("t").collect().map(r => r.getInt(0) -> r.getString(1))
+      .toMap == Map(1 -> "a", 2 -> "b"))
+  }
+
+  test("an FK orphan on an ignored re-sent row still fails the batch") {
+    val sink = checkedSink()
+    sink.loadStar(Map("dim_sedes" -> sedes(1),
+      "fct_transacciones" -> fct(Row(10, 1, "a"))))
+    // FKs are checked on every incoming row, as the warehouse checks
+    // every insert: the re-sent row 10 now points at sede 9
+    val e = intercept[IllegalArgumentException] {
+      sink.loadStar(Map("fct_transacciones" ->
+        fct(Row(10, 9, "a"), Row(11, 1, "b"))))
+    }
+    assert(e.getMessage.contains("violate FK"))
+    assert(sink.read("fct_transacciones").count() == 1)
+  }
+
+  test("appendOnlyNew enforces no FK; only loadStar does") {
+    val sink = checkedSink()
+    // dim_sedes is not even loaded: a direct append checks PK and
+    // VARCHAR only (stream micro-batches rely on this)
+    assert(sink.appendOnlyNew(fct(Row(10, 9, "a")), "fct_transacciones",
+      "id_trx") == (1L, 0L))
+    assertThrows[IllegalArgumentException] {
+      sink.loadStar(Map("fct_transacciones" -> fct(Row(11, 9, "a"))))
+    }
+  }
+
+  test("checks fail in order with their messages: missing parent, FK orphans, duplicate PK, VARCHAR") {
+    val sink = checkedSink()
+    def failure(rows: Row*) = intercept[IllegalArgumentException] {
+      sink.loadStar(Map("fct_transacciones" -> fct(rows: _*)))
+    }.getMessage
+    val allFaults = Seq(Row(10, 9, "toolong"), Row(10, 1, "a"))
+    assert(failure(allFaults: _*) == "requirement failed: table " +
+      "'fct_transacciones' declares FK id_sede -> dim_sedes(id_sede) but " +
+      "'dim_sedes' is not loaded — star load order violated")
+    sink.loadStar(Map("dim_sedes" -> sedes(1)))
+    assert(failure(allFaults: _*) == "requirement failed: table " +
+      "'fct_transacciones': 1 rows violate FK id_sede -> dim_sedes(id_sede) " +
+      "— the warehouse REFERENCES constraint rejects this batch")
+    assert(failure(Row(10, 1, "toolong"), Row(10, 1, "a")) ==
+      "requirement failed: table 'fct_transacciones': incoming batch " +
+      "carries 1 duplicate non-null 'id_trx' rows; the never-update sink " +
+      "refuses ambiguous batches — dedup upstream " +
+      "(Transform.dedupKeepFirst) where row order exists")
+    assert(failure(Row(10, 1, "toolong"), Row(11, 1, "a")) ==
+      "requirement failed: table 'fct_transacciones' column 'v' exceeds " +
+      "VARCHAR(5): longest incoming value is 7 chars — the warehouse DDL " +
+      "rejects this")
+    assert(!sink.exists("fct_transacciones")) // no failure wrote a row
+  }
+
+  test("null PKs insert on every load, beside ignored stored keys") {
+    val sink = freshSink()
+    assert(sink.appendOnlyNew(df(Row(1, "a"), Row(null, "n")), "t", "pk")
+      == (2L, 0L))
+    assert(sink.appendOnlyNew(df(Row(1, "a"), Row(null, "n")), "t", "pk")
+      == (1L, 1L))
+    assert(sink.read("t").where("pk IS NULL").count() == 2)
+  }
+
+  test("compact leaves an already compact table alone") {
+    for (partCols <- Seq(Nil, Seq("v"))) {
+      val whDir = Files.createTempDirectory("graft_sink_recompact").toString
+      val sink = new IncrementalSink(spark, whDir,
+        partitioning = Map("t" -> partCols))
+      sink.appendOnlyNew(df(Row(1, "a"), Row(2, "b"), Row(3, "a")), "t", "pk")
+      sink.appendOnlyNew(df(Row(4, "a"), Row(5, "b")), "t", "pk")
+      def files() = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$whDir/t"))
+        try s.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".parquet")).toSet
+        finally s.close()
+      }
+      val (nBefore, n) = sink.compact("t")
+      assert(n < nBefore)
+      val compacted = files()
+      assert(sink.compact("t") == (n, n))
+      assert(files() == compacted)
+      assert(sink.read("t").count() == 5)
+    }
   }
 }

@@ -2,7 +2,7 @@
 # Run graft.Verify (or another main via MAIN=) against a compiled classpath,
 # bypassing sbt startup. Usage: scripts/run_verify.sh <sfDir> <outDir>
 set -e
-cd /root/repo
+cd "$(dirname "$(readlink -f "${BASH_SOURCE[0]}")")/.."
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \

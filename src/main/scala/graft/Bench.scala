@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Benchmark main (driver contract): times every registry query at the
   * sf-dir in SPARK_GRAFT_SF_DIR, WRITES the complete per-query artifact
@@ -824,18 +824,11 @@ object Bench {
     // the r13 driver bench flagged q112 (124 KB→910 KB) and q138
     // (2.8 MB→4.8 MB) purely because the canonical had run at the old
     // 4-thread default. The byte gate below only applies at this width.
-    // parsed to Int once, failing fast: the value is embedded unquoted
-    // in the JSON artifact (a stray "4,8" would corrupt it) and the
-    // byte-floor gate compares it numerically (so "032"/" 32" can't
-    // silently disable the gate)
-    val cpus: Int = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim
-      try raw.toInt catch {
-        case _: NumberFormatException => sys.error(
-          s"SPARK_GRAFT_CPUS must be an integer, got '$raw'")
-      }
-    }
-    require(cpus >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $cpus")
+    // parsed to Int, failing fast: the value is embedded unquoted in the
+    // JSON artifact (a stray "4,8" would corrupt it) and the byte-floor
+    // gate compares it numerically (so "032"/" 32" can't silently
+    // disable the gate)
+    val cpus = GraftSession.envCpus(32)
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUPS", "1").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // dev-loop filter: comma-separated query-name substrings; unset = all.
@@ -853,14 +846,8 @@ object Bench {
         .split("\\s+")(0).toDouble
       catch { case _: Exception => -1.0 }
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.GraftSession.tune(spark)
-    graft.engine.GraftSession.quietKnownBenignWarnings()
+    val spark = GraftSession.local(cpus)
+    GraftSession.quietKnownBenignWarnings()
     val shuffleMeter = new ShuffleBytesListener
     spark.sparkContext.addSparkListener(shuffleMeter)
     def drainListenerBus(): Unit =

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.engine.GraftSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.GraftSession.quietKnownBenignWarnings()
+    val spark = GraftSession.local(GraftSession.envCpus(4))
+    GraftSession.quietKnownBenignWarnings()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (Bench's SPARK_GRAFT_BENCH_ONLY precedent): a
     // filtered dump writes only matching query dirs, so a later full

@@ -13,13 +13,15 @@ import org.apache.spark.sql.SparkSession
   *    (`errors='coerce'`, /root/reference/src/transform.py:61-64,113-122);
   *    we additionally use explicit `try_cast` at every such site so the
   *    behavior is pinned regardless of ANSI mode.
-  *  - shuffle.partitions sized to cores, not the 200 default: correct for
-  *    local[N]; on a real cluster this is overridden by AQE coalescing.
+  *  - local[N] with N the host's processors unless the caller passes a
+  *    width, and shuffle.partitions sized to it, not the 200 default:
+  *    correct for local[N]; on a real cluster AQE coalescing overrides it.
   *  - AQE on: runtime re-planning (skew joins, partition coalescing) is the
   *    scale story for 100 TB — plans are declared, Spark adapts them.
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cores: Int = Runtime.getRuntime.availableProcessors,
+      appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -31,6 +33,17 @@ object GraftSession {
     // all SQL-level configs + function registration live in tune() so
     // the two session paths (own factory vs driver-provided) can't drift
     tune(spark)
+  }
+
+  /** The width `SPARK_GRAFT_CPUS` asks the artifact mains for, else
+    * `default`. Parsed once and failing fast: a value that is not a
+    * positive integer is an error, never a silently different width. */
+  def envCpus(default: Int): Int = {
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString).trim
+    val cpus = raw.toIntOption.getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$raw'"))
+    require(cpus >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $cpus")
+    cpus
   }
 
   /** Silence the `WindowExec` no-partition warning CATEGORY in the

@@ -34,10 +34,4 @@ object Par {
     val b = fork("graft-par-1")(fb)
     (fa, join(b))
   }
-
-  def run3[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    val b = fork("graft-par-1")(fb)
-    val c = fork("graft-par-2")(fc)
-    (fa, join(b), join(c))
-  }
 }

@@ -14,7 +14,7 @@ import graft.sources.{InsertIfAbsent, KeyedStore}
   * Each table load is [[InsertIfAbsent]]'s single pass: the incoming
   * rows are probed against broadcast key-only reads of the table's
   * stored PKs and (on the [[loadStar]] path) of each FK parent's PKs,
-  * materialized once, checked by one tally and appended once. Key
+  * materialized once, checked by one tally and appended once. Table
   * reads take their schema from a data file's footer on the driver, so
   * no job infers it. The broadcast holds one key column: at a scale
   * where the stored keys outgrow a broadcast, this is the hint to drop
@@ -55,17 +55,16 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table))
-
-  /** [[read]] with the schema of a data file's footer, read on the
-    * driver: no job infers it. */
-  private def readStored(table: String): DataFrame =
+  /** The table's rows, read with the schema of a data file's footer,
+    * which the driver reads: no job infers it. Partition columns are
+    * still discovered from the paths. */
+  def read(table: String): DataFrame =
     ParquetStore.footerSchema(spark, path(table))
       .fold(spark.read)(spark.read.schema).parquet(path(table))
 
   /** Broadcast key-only read of `table`. */
   private def keys(table: String, key: String): DataFrame =
-    broadcast(readStored(table).select(col(key)))
+    broadcast(read(table).select(col(key)))
 
   private def limits(table: String) =
     varcharLimits.getOrElse(table, Map.empty).toSeq
@@ -115,7 +114,7 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     * of a previous run heals on the next call, so rerunning `compact`
     * repairs and retries. Returns (files before, files after). */
   def compact(table: String): (Long, Long) =
-    ParquetStore.compact(spark, path(table), readStored(table),
+    ParquetStore.compact(spark, path(table), read(table),
       partitioning.getOrElse(table, Nil), skipIfCompact = true)
 
   /** FK-ordered load of the whole star (SURVEY §3.1; main.py:70-89):

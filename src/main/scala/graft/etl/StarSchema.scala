@@ -103,10 +103,6 @@ object StarSchema {
     StructField("_c4", StringType), StructField("_c5", StringType),
     StructField("_c6", StringType)))
 
-  /** The headerless 2-column "Varios" sheet (FIXTURES.md §A3). */
-  val rawVarios: StructType = StructType(Seq(
-    StructField("c0", StringType), StructField("c1", StringType)))
-
   val rawRecomendados: StructType = StructType(Seq(
     StructField("IDCLIENTE", IntegerType),
     StructField("IDDISTRIBUIDOR", IntegerType),

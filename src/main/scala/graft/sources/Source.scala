@@ -3,22 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Format-agnostic source abstraction (SURVEY.md §2.1).
-  *
-  * The reference ingests Excel sheets and a JSON array, optionally fetched
-  * from a remote object store first (/root/reference/src/extract.py:46-128:
-  * download precedes scan). We model the same split: an optional
-  * [[ObjectStoreFetcher]] runs on the driver before the scan; the scan
-  * itself is a [[Source]] returning a DataFrame.
+/** Format-agnostic source abstraction (SURVEY.md §2.1): each format's
+  * scan is a [[Source]] returning a DataFrame (the reference ingests
+  * Excel sheets and a JSON array, extract.py:46-128).
   */
 trait Source {
   def load(spark: SparkSession): DataFrame
-}
-
-/** Parquet directory/file scan — the engine's primary columnar source.
-  * Predicate pushdown and column pruning reach the scan for free. */
-final case class ParquetSource(path: String) extends Source {
-  def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
 }
 
 /** Whole-document JSON array scan (SURVEY §2.1 S2): the reference loads one
@@ -127,19 +117,4 @@ object JdbcSink {
         JdbcSink.append(rows, url, table, properties)
     })
   }
-}
-
-/** Driver-side fetch of a remote object to a local path before scanning
-  * (SURVEY §2.1 S3: the reference's Drive connector is a pre-scan
-  * side-channel, not a dataflow operator). Implementations wrap whatever
-  * client the deployment has; the engine only needs the local path back.
-  */
-trait ObjectStoreFetcher {
-  def fetch(objectName: String, container: String, localPath: String): String
-}
-
-/** A fetcher for already-local files (tests, mounted filesystems). */
-object LocalFetcher extends ObjectStoreFetcher {
-  def fetch(objectName: String, container: String, localPath: String): String =
-    s"$container/$objectName"
 }

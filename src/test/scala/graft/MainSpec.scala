@@ -96,6 +96,23 @@ class MainSpec extends SparkSpec {
       .map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(sedes == Map(1 -> "Sede\nCentro", 2 -> "Sede Norte"))
 
+    // every table holds its StarSchema declaration's columns and types
+    // (compared by name, nullability aside); the fact adds its physical
+    // partition column
+    val declared = Map(
+      "dim_sedes" -> StarSchema.dimSedes,
+      "dim_tipo_transaccion" -> StarSchema.dimTipoTransaccion,
+      "dim_distribuidores" -> StarSchema.dimDistribuidores,
+      "dim_clientes" -> StarSchema.dimClientes,
+      "fct_transacciones" -> StarSchema.fctTransacciones)
+    assert(declared.keySet == StarSchema.loadOrder.toSet)
+    def types(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toMap
+    declared.foreach { case (t, schema) =>
+      assert(types(sink.read(t).schema) - "fecha_trx_date" == types(schema), t)
+    }
+    assert(sink.read("fct_transacciones").columns.contains("fecha_trx_date"))
+
     // daily re-run: idempotent (0 inserted everywhere)
     assert(Main.runEtl(spark, src.toString, wh).values.map(_._1).sum == 0L)
 
@@ -122,13 +139,23 @@ class MainSpec extends SparkSpec {
     writeCsvLayout(src)
     Main.runEtl(spark, src.toString, wh)
     val sc = spark.sparkContext
-    val group = "etl-incremental-day"
-    sc.setJobGroup(group, "second etl day")
-    try assert(Main.runEtl(spark, src.toString, wh).values.map(_._1).sum == 0L)
-    finally sc.clearJobGroup()
-    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    def jobsOf(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val jobs = jobsOf("second etl day") {
+      assert(Main.runEtl(spark, src.toString, wh).values.map(_._1).sum == 0L)
+    }
     assert(jobs <= 28, s"$jobs jobs")
+    // the report's three table reads take their schema from a footer,
+    // so none runs a schema-inference job: the report measured 8 jobs
+    // (11 with an inference job per read)
+    val reportJobs = jobsOf("that day's report") {
+      Main.runReport(spark, wh, java.time.LocalDate.parse("2025-06-14"))
+    }
+    assert(reportJobs <= 9, s"$reportJobs jobs")
   }
 
   test("dedup-ingest: two CLI passes reproduce the one-shot candidate set") {

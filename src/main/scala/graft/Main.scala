@@ -1104,12 +1104,13 @@ object Main {
   }
 
   /** Maintenance pass: collapse each star table's accumulated daily
-    * append-files (run periodically, like a VACUUM). Returns (table,
-    * files before, files after). */
+    * append-files (run periodically, like a VACUUM). A table a crashed
+    * compact left mid-swap is compacted too, which heals it. Returns
+    * (table, files before, files after). */
   private[graft] def runCompact(spark: org.apache.spark.sql.SparkSession,
       warehouse: String): Seq[(String, Long, Long)] = {
     val sink = new IncrementalSink(spark, warehouse)
-    graft.etl.StarSchema.loadOrder.filter(sink.exists).map { t =>
+    graft.etl.StarSchema.loadOrder.filter(sink.store(_).present).map { t =>
       val (before, after) = sink.compact(t)
       (t, before, after)
     }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Diff
@@ -33,36 +33,29 @@ final class ChecksumStore(spark: SparkSession, storeDir: String) {
 
   private val Mod = 4611686018427387904L // 2^62
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "checksum store")
+  private val store = new ParquetStore(spark, storeDir, "checksum store")
 
   /** Fold one batch's per-group checksums into the store. The batch
     * must be NEW rows (the partition-by-row contract above). */
   def ingest(batch: DataFrame, groupCol: String, textCol: String): Unit =
-    Diff.contentChecksum(batch, groupCol, textCol)
-      .write.mode(SaveMode.Append).parquet(storeDir)
+    store.append(Diff.contentChecksum(batch, groupCol, textCol))
 
   /** The corpus fingerprint over everything ingested: one row per
     * group, identical to a one-shot [[Diff.contentChecksum]] over the
     * union of all batches (spec-pinned). */
-  def fingerprint: DataFrame = {
-    val b =
-      if (storeExists) spark.read.parquet(storeDir)
-      else spark.range(0).select(col("id").cast("string").as("grp"),
+  def fingerprint: DataFrame =
+    store.read(spark.range(0).select(col("id").cast("string").as("grp"),
         col("id").as("n_rows"), col("id").as("n_nulls"),
-        col("id").as("sum_hash"), col("id").as("xor_hash"))
-    b.groupBy(col("grp"))
+        col("id").as("sum_hash"), col("id").as("xor_hash")))
+      .groupBy(col("grp"))
       .agg(sum(col("n_rows")).as("n_rows"),
         sum(col("n_nulls")).as("n_nulls"),
         expr(s"CAST(sum(CAST(sum_hash AS DECIMAL(38,0))) % ${Mod}L" +
           " AS BIGINT)").as("sum_hash"),
         expr("bit_xor(xor_hash)").as("xor_hash"))
       .orderBy(col("grp").asc_nulls_first)
-  }
 
-  /** Merge-on-compact ([[DfStore.compact]] discipline): rewrite the
-    * per-ingest appends into the merged |groups| frame via the shared
-    * verified swap. Returns (files before, files after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprint)
+  /** Merge-on-compact: rewrite the per-ingest appends into the merged
+    * |groups| frame. Returns (files before, files after). */
+  def compact(): (Long, Long) = store.compact(fingerprint)
 }

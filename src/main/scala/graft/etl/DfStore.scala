@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
@@ -37,45 +37,23 @@ import graft.functions.TextHash
 final class DfStore(spark: SparkSession, storeDir: String, n: Int = 5) {
   require(n >= 1 && n <= 64, s"window span n=$n out of [1, 64]")
 
-  private val shapeMeta = new MetadataBuilder()
-    .putLong("df_span", n.toLong).build()
-
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "df store")
-
-  /** Fail fast when the store on disk was built with a different
-    * window span (parquet round-trips the column metadata). */
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "df").map(_.metadata)
-      .filter(_.contains("df_span")).foreach { m =>
-        require(m.getLong("df_span") == n.toLong,
-          s"df store at $storeDir holds span ${m.getLong("df_span")} " +
-            s"windows; this handle was opened with n=$n")
-      }
-    df
-  }
+  private val store = new ParquetStore(spark, storeDir, "df store",
+    stamp = Some("df" -> new MetadataBuilder().putLong("df_span", n.toLong)
+      .build()))
 
   /** Fold one batch's per-window document frequencies into the store.
     * The batch must be a NEW, complete set of documents (the
     * partition-by-document contract above). */
-  def ingest(docs: DataFrame, idCol: String, textCol: String): Unit = {
-    if (storeExists) checkedRead() // span-mismatch fails before append
-    docs.select(col(idCol).as("doc_id"),
+  def ingest(docs: DataFrame, idCol: String, textCol: String): Unit =
+    store.append(docs.select(col(idCol).as("doc_id"),
         explode(TextHash.windowHashesOf(col(textCol), n)).as("hs"))
       .distinct()
-      .groupBy(col("hs")).agg(count(lit(1)).as("df"))
-      .select(col("hs"), col("df").as("df", shapeMeta))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+      .groupBy(col("hs")).agg(count(lit(1)).as("df")))
 
   /** The merged (hs, df) frame over everything ingested. */
-  def dfCounts: DataFrame = {
-    val b =
-      if (storeExists) checkedRead()
-      else spark.range(0).select(col("id").as("hs"), col("id").as("df"))
-    b.groupBy(col("hs")).agg(sum(col("df")).as("df"))
-  }
+  def dfCounts: DataFrame =
+    store.read(spark.range(0).select(col("id").as("hs"), col("id").as("df")))
+      .groupBy(col("hs")).agg(sum(col("df")).as("df"))
 
   /** The boilerplate vocabulary at a df threshold. */
   def frequent(minDf: Int = 2): DataFrame = {
@@ -105,8 +83,6 @@ final class DfStore(spark: SparkSession, storeDir: String, n: Int = 5) {
   }
 
   /** Merge-on-compact ([[CmsStore.compact]]): rewrite the appends into
-    * the merged frame via the shared verified swap. */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir,
-      dfCounts.select(col("hs"), col("df").as("df", shapeMeta)))
+    * the merged frame. */
+  def compact(): (Long, Long) = store.compact(dfCounts)
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal}
@@ -26,8 +26,9 @@ import graft.operators.{Dedup, Multimodal}
   * the store), reads are distinct-then-cluster via
   * [[Dedup.fingerprintClusters]]'s duplicate-mass-bounded component
   * propagation (untouched fingerprints never broadcast),
-  * [[compact]] folds the per-ingest appends through the shared
-  * verified-swap [[ParquetStore]] discipline. */
+  * [[compact]] folds the per-ingest appends. The store is a
+  * [[ParquetStore]] handle (gated reads and appends, verified-swap
+  * compaction). */
 abstract class FingerprintStore(spark: SparkSession, storeDir: String,
     what: String) {
 
@@ -36,8 +37,7 @@ abstract class FingerprintStore(spark: SparkSession, storeDir: String,
   protected def fingerprintFrame(
       media: Dataset[Multimodal.MediaRecord]): DataFrame
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, what)
+  private val store = new ParquetStore(spark, storeDir, what)
 
   /** Decode one media batch and append its fingerprints. Returns the
     * number of DECODABLE rows appended (corrupt rows drop, never
@@ -59,7 +59,7 @@ abstract class FingerprintStore(spark: SparkSession, storeDir: String,
     fps.persist()
     try {
       val n = fps.count()
-      fps.write.mode(SaveMode.Append).parquet(storeDir)
+      store.append(fps)
       n
     } finally fps.unpersist()
   }
@@ -67,8 +67,8 @@ abstract class FingerprintStore(spark: SparkSession, storeDir: String,
   /** The stored fingerprint frame, re-delivery folded: one
     * (doc_id, fp) row per doc. */
   def fingerprints: DataFrame =
-    if (storeExists) spark.read.parquet(storeDir).distinct()
-    else spark.range(0).select(col("id").as("doc_id"), col("id").as("fp"))
+    store.read(spark.range(0).select(col("id").as("doc_id"),
+      col("id").as("fp"))).distinct()
 
   /** Hamming-≤ near-dup pairs over the STORE — zero payload access. */
   def pairs(maxHamming: Int = 3, bits: Int = 64): DataFrame =
@@ -95,18 +95,16 @@ abstract class FingerprintStore(spark: SparkSession, storeDir: String,
     Dedup.fingerprintDecontam(fingerprints, evalFps, "doc_id", "fp",
       maxHamming, bits)
 
-  /** Fold the per-ingest appends into the distinct frame via the
-    * shared verified swap. Returns (files before, files after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprints)
+  /** Fold the per-ingest appends into the distinct frame. Returns
+    * (files before, files after). */
+  def compact(): (Long, Long) = store.compact(fingerprints)
 }
 
 /** Incremental AUDIO-fingerprint store — the [[DhashStore]] family's
   * audio binding (q262/q266's envelope-hash state): gain-robust
   * 64-bit energy-envelope hashes ([[Multimodal.audioFingerprints]])
-  * with the shared decode-once / distinct-merge / verified-compact
-  * discipline. PCM WAV/AIFF only (the documented JDK limit — q262's
-  * contract). */
+  * with the shared decode-once / distinct-merge discipline. PCM
+  * WAV/AIFF only (the documented JDK limit — q262's contract). */
 final class AudioFpStore(spark: SparkSession, storeDir: String)
     extends FingerprintStore(spark, storeDir, "audio fp store") {
   protected def fingerprintFrame(
@@ -128,7 +126,7 @@ final class AudioFpStore(spark: SparkSession, storeDir: String)
   * ImageIO decode per frame), 16 bytes per FRAME cross into the
   * store, re-delivered batches fold away in the read-side distinct
   * (fingerprints are pure functions of the payload), corrupt frames
-  * are never stored, and [[compact]] is the shared verified swap.
+  * are never stored, and [[compact]] folds the appends.
   * The decode pass is the binding's single seam — [[VideoFpStore]]
   * (MJPEG/AVI) and [[GifFpStore]] (static + animated GIF) differ in
   * nothing else. */
@@ -140,8 +138,7 @@ abstract class SequenceFpStore(spark: SparkSession, storeDir: String,
   protected def fingerprintFrame(
       media: Dataset[Multimodal.MediaRecord]): DataFrame
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, what)
+  private val store = new ParquetStore(spark, storeDir, what)
 
   /** Walk + frame-decode one media batch and append its per-frame
     * fingerprints. Returns the number of DECODABLE payloads appended
@@ -160,7 +157,7 @@ abstract class SequenceFpStore(spark: SparkSession, storeDir: String,
     fps.persist()
     try {
       val n = fps.select(col("doc_id")).distinct().count()
-      fps.write.mode(SaveMode.Append).parquet(storeDir)
+      store.append(fps)
       n
     } finally fps.unpersist()
   }
@@ -168,9 +165,8 @@ abstract class SequenceFpStore(spark: SparkSession, storeDir: String,
   /** The stored frame-fingerprint frame, re-delivery folded: one
     * (doc_id, frame_idx, fp) row per decoded frame. */
   def fingerprints: DataFrame =
-    if (storeExists) spark.read.parquet(storeDir).distinct()
-    else spark.range(0).select(col("id").as("doc_id"),
-      col("id").as("frame_idx"), col("id").as("fp"))
+    store.read(spark.range(0).select(col("id").as("doc_id"),
+      col("id").as("frame_idx"), col("id").as("fp"))).distinct()
 
   /** Aligned sequence near-dup pairs over the STORE — zero payload
     * access (q278's decision on the full history). */
@@ -233,10 +229,9 @@ abstract class SequenceFpStore(spark: SparkSession, storeDir: String,
       evalFps, "doc_id", "frame_idx", "fp", k, minSharedNum,
       minSharedDen, maxDf)
 
-  /** Fold the per-ingest appends into the distinct frame via the
-    * shared verified swap. Returns (files before, files after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, fingerprints)
+  /** Fold the per-ingest appends into the distinct frame. Returns
+    * (files before, files after). */
+  def compact(): (Long, Long) = store.compact(fingerprints)
 }
 
 /** The MJPEG/AVI binding (q277/q278/q279's state). Non-MJPEG videos

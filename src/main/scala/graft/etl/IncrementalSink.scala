@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.sources.{InsertIfAbsent, KeyedStore}
@@ -14,14 +13,15 @@ import graft.sources.{InsertIfAbsent, KeyedStore}
   * Each table load is [[InsertIfAbsent]]'s single pass: the incoming
   * rows are probed against broadcast key-only reads of the table's
   * stored PKs and (on the [[loadStar]] path) of each FK parent's PKs,
-  * materialized once, checked by one tally and appended once. Table
-  * reads take their schema from a data file's footer on the driver, so
-  * no job infers it. The broadcast holds one key column: at a scale
-  * where the stored keys outgrow a broadcast, this is the hint to drop
-  * (Spark then plans a shuffle join; the pass is unchanged). Never
-  * update: re-sent changed rows are ignored. Null PKs always insert.
-  * Locally the directory append is atomic enough for one writer; a
-  * multi-writer deployment needs a transactional table format.
+  * materialized once, checked by one tally and appended once. Each
+  * table is a [[ParquetStore]] handle, which gates its reads and
+  * appends and owns its compaction. The broadcast holds one key
+  * column: at a scale where the stored keys outgrow a broadcast, this
+  * is the hint to drop (Spark then plans a shuffle join; the pass is
+  * unchanged). Never update: re-sent changed rows are ignored. Null
+  * PKs always insert. Locally the directory append is atomic enough
+  * for one writer; a multi-writer deployment needs a transactional
+  * table format.
   */
 final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     partitioning: Map[String, Seq[String]] = StarSchema.partitioning,
@@ -29,38 +29,20 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     foreignKeys: Map[String, Seq[(String, String, String)]] =
       StarSchema.foreignKeys) {
 
-  private def path(table: String) = s"$warehouseDir/$table"
+  /** The table's handle: its directory under `warehouseDir`, laid out
+    * by its partition spec (SURVEY §4: the fact by date). */
+  private[graft] def store(table: String): ParquetStore =
+    new ParquetStore(spark, s"$warehouseDir/$table", s"table '$table'",
+      partitioning.getOrElse(table, Nil))
 
-  /** Partitioned write when the table has a partition spec (SURVEY §4:
-    * the fact by date). A declared partition column MISSING from the
-    * frame fails loudly: silently writing unpartitioned files into a
-    * partitioned directory corrupts the table's layout (mixed
-    * root-level and `col=.../` files break partition discovery on the
-    * next read). */
-  private def write(df: DataFrame, mode: SaveMode, table: String): Unit = {
-    val cols = partitioning.getOrElse(table, Nil)
-    val missing = cols.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"table '$table' declares partition columns $cols but the frame lacks $missing")
-    val w = df.write.mode(mode)
-    (if (cols.nonEmpty) w.partitionBy(cols: _*) else w).parquet(path(table))
-  }
+  /** True iff the table holds committed data ([[ParquetStore.exists]]). */
+  def exists(table: String): Boolean = store(table).exists
 
-  /** True iff the table directory exists and is non-empty. Goes
-    * through the path's Hadoop FileSystem, so `file:`/`hdfs:` URIs and
-    * plain paths resolve alike. */
-  def exists(table: String): Boolean = {
-    val p = new Path(path(table))
-    val fs = ParquetStore.hfs(spark, p)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
-  /** The table's rows, read with the schema of a data file's footer,
-    * which the driver reads: no job infers it. Partition columns are
-    * still discovered from the paths. */
-  def read(table: String): DataFrame =
-    ParquetStore.footerSchema(spark, path(table))
-      .fold(spark.read)(spark.read.schema).parquet(path(table))
+  /** The table's rows ([[ParquetStore.read]]: no job infers the
+    * schema). */
+  def read(table: String): DataFrame = store(table).read(
+    throw new IllegalStateException(
+      s"table '$table' is not loaded under $warehouseDir"))
 
   /** Broadcast key-only read of `table`. */
   private def keys(table: String, key: String): DataFrame =
@@ -75,7 +57,7 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     * it (their key probe is a plain join). */
   def overwrite(df: DataFrame, table: String): Unit = {
     InsertIfAbsent.checkWidths(df, s"table '$table'", limits(table))
-    write(df, SaveMode.Overwrite, table)
+    store(table).overwrite(df)
   }
 
   /** Incremental append of only-new PKs with the PK and VARCHAR checks;
@@ -98,8 +80,7 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     InsertIfAbsent(df, s"table '$table'", pkCol, new KeyedStore {
       def exists: Boolean = IncrementalSink.this.exists(table)
       def keys(key: String): DataFrame = IncrementalSink.this.keys(table, key)
-      def append(rows: DataFrame): Unit =
-        write(rows, SaveMode.Append, table)
+      def append(rows: DataFrame): Unit = store(table).append(rows)
     }, probes, limits(table))
   }
 
@@ -107,15 +88,12 @@ final class IncrementalSink(spark: SparkSession, warehouseDir: String,
     * outputs. Daily incremental appends (load.py's cadence) add a file
     * per run per partition; after months the fact is thousands of tiny
     * files and scan planning/open overhead dominates — the classic
-    * small-files problem of append-only sinks. The rewrite is the
-    * stores' shared temp-write-then-verified-swap
-    * ([[ParquetStore.compact]]), keeping the table's partition layout
-    * and skipping a table that is already compact; every crash window
-    * of a previous run heals on the next call, so rerunning `compact`
-    * repairs and retries. Returns (files before, files after). */
+    * small-files problem of append-only sinks. The rewrite
+    * ([[ParquetStore.compact]]) keeps the table's partition layout and
+    * skips a table that is already compact. Returns (files before,
+    * files after). */
   def compact(table: String): (Long, Long) =
-    ParquetStore.compact(spark, path(table), read(table),
-      partitioning.getOrElse(table, Nil), skipIfCompact = true)
+    store(table).compact(read(table), skipIfCompact = true)
 
   /** FK-ordered load of the whole star (SURVEY §3.1; main.py:70-89):
     * parents before children before the fact. Each table's non-null FKs

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
@@ -21,8 +21,8 @@ import graft.operators.Sketch
   * RE-DELIVERED batch cannot move the sketch. This is the deliberate
   * contrast inside the store family: [[CmsStore]]/[[DfStore]] counters
   * double-count on re-delivery (exactly-once is the scheduler's
-  * contract there); KMV joins [[graft.streaming.HllStream]]'s
-  * register-max law on the at-least-once-safe side. The spec pins
+  * contract there); KMV joins [[Sketch.hllRegisters]]'s register-max
+  * law on the at-least-once-safe side. The spec pins
   * both batch-split ≡ one-shot and the re-ingest no-op.
   *
   * The sketch size `k` is part of the store's identity (a k=64 row
@@ -40,34 +40,16 @@ final class KmvStore(spark: SparkSession, storeDir: String,
   require(k > 1 && (1 << 20) % k == 0,
     s"need k > 1 dividing 2^20, got $k")
 
-  private val shapeMeta = new MetadataBuilder()
-    .putLong("kmv_k", k.toLong).build()
-
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "kmv store")
-
-  /** Fail fast when the store on disk was built at a different k
-    * (parquet round-trips the column metadata). */
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "h").map(_.metadata)
-      .filter(_.contains("kmv_k")).foreach { m =>
-        require(m.getLong("kmv_k") == k.toLong,
-          s"kmv store at $storeDir holds k=${m.getLong("kmv_k")} " +
-            s"sketches; this handle was opened with k=$k")
-      }
-    df
-  }
+  private val store = new ParquetStore(spark, storeDir, "kmv store",
+    stamp = Some("h" -> new MetadataBuilder().putLong("kmv_k", k.toLong)
+      .build()))
 
   /** Fold one batch's per-group k-minima into the store. Re-delivery
     * is SAFE (the idempotent-merge law above) — batches need only
     * jointly COVER the corpus, not partition it. */
-  def ingest(batch: DataFrame, groupCol: String, textCol: String): Unit = {
-    if (storeExists) checkedRead() // k-mismatch fails before append
-    Sketch.kmvSketch(batch, groupCol, textCol, k)
-      .select(col(groupCol).as("grp"), col("h").as("h", shapeMeta))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+  def ingest(batch: DataFrame, groupCol: String, textCol: String): Unit =
+    store.append(Sketch.kmvSketch(batch, groupCol, textCol, k)
+      .select(col(groupCol).as("grp"), col("h")))
 
   /** The merged per-group sketch over everything ingested: one
     * (grp, h) row per surviving minimum, ≤ k per group — identical to
@@ -75,11 +57,9 @@ final class KmvStore(spark: SparkSession, storeDir: String,
     * (spec-pinned). */
   def sketches: DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b =
-      if (storeExists) checkedRead()
-      else spark.range(0).select(col("id").cast("string").as("grp"),
-        col("id").as("h"))
-    b.select(col("grp"), col("h")).distinct()
+    store.read(spark.range(0).select(col("id").cast("string").as("grp"),
+        col("id").as("h")))
+      .select(col("grp"), col("h")).distinct()
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("grp")).orderBy(col("h"))))
       .where(col("rn") <= k)
@@ -90,10 +70,7 @@ final class KmvStore(spark: SparkSession, storeDir: String,
     * matrix, no corpus access at all. */
   def pairMatrix: DataFrame = Sketch.kmvPairMatrix(sketches, "grp", k)
 
-  /** Merge-on-compact ([[DfStore.compact]] discipline): rewrite the
-    * per-ingest appends into the merged ≤ |groups|·k frame via the
-    * shared verified swap. Returns (files before, files after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir,
-      sketches.select(col("grp"), col("h").as("h", shapeMeta)))
+  /** Merge-on-compact: rewrite the per-ingest appends into the merged
+    * ≤ |groups|·k frame. Returns (files before, files after). */
+  def compact(): (Long, Long) = store.compact(sketches)
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -32,9 +32,9 @@ import graft.operators.Dedup
   * |bands| per doc, 8-byte-hash-sized sigs — so the probe is one
   * (band, sig) hash equi-join and the record step one append, both
   * free of driver state. The store grows by |bands| rows per doc:
-  * compact() periodically rewrites the appends into sized files via
-  * the shared [[ParquetStore]] swap (verified renames, self-healing
-  * crash windows).
+  * compact() periodically rewrites the appends into sized files. The
+  * store is a [[ParquetStore]] handle (gated reads and appends,
+  * verified-swap compaction).
   *
   * LIVE ingest needs no wrapper module: `readStream → foreachBatch {
   * idx.probeAndRecord }` under `Trigger.AvailableNow` IS the
@@ -51,8 +51,7 @@ import graft.operators.Dedup
 final class LshIndex(spark: SparkSession, storeDir: String,
     k: Int = 16, bands: Int = 4) {
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "LSH index")
+  private val store = new ParquetStore(spark, storeDir, "LSH index")
 
   /** The stored band signatures (empty before the first record).
     * Before any record the id type is unknowable from disk, so the
@@ -60,9 +59,8 @@ final class LshIndex(spark: SparkSession, storeDir: String,
     * uses this default (it derives the empty frame from the batch's
     * actual signature schema, so non-long ids join cleanly). */
   def storedSignatures: DataFrame =
-    if (storeExists) spark.read.parquet(storeDir)
-    else spark.range(0).select(col("id").as("doc_id"),
-      lit(0).as("band"), lit("").as("sig"))
+    store.read(spark.range(0).select(col("id").as("doc_id"),
+      lit(0).as("band"), lit("").as("sig")))
 
   /** Probe `batch` against everything recorded so far, then record
     * this batch's signatures. Returns candidate pairs
@@ -77,8 +75,7 @@ final class LshIndex(spark: SparkSession, storeDir: String,
     // empty-store fallback mirrors the BATCH's signature schema (not a
     // hardcoded long doc_id) so a non-long id column probes cleanly on
     // the first batch instead of hitting a join type mismatch
-    val stored = if (storeExists) spark.read.parquet(storeDir)
-      else sigs.limit(0)
+    val stored = store.read(sigs.limit(0))
     val vsStore = sigs.select(col("doc_id").as("doc_b"), col("band"),
         col("sig"))
       .join(stored.select(col("doc_id").as("doc_a"), col("band"),
@@ -93,12 +90,11 @@ final class LshIndex(spark: SparkSession, storeDir: String,
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))
       .localCheckpoint(true) // materialize BEFORE the store grows
-    sigs.write.mode(SaveMode.Append).parquet(storeDir)
+    store.append(sigs)
     cands
   }
 
-  /** Rewrite accumulated appends into sized files — the shared
-    * [[ParquetStore.compact]] swap. Returns (files before, after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, storedSignatures)
+  /** Rewrite accumulated appends into sized files
+    * ([[ParquetStore.compact]]). Returns (files before, after). */
+  def compact(): (Long, Long) = store.compact(storedSignatures)
 }

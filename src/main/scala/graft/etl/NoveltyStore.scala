@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
@@ -30,8 +30,9 @@ import graft.functions.TextHash
   * append — both partitioned on the hash, no driver state, no window.
   * The store only ever grows by DISTINCT new hashes (within-batch
   * dedup via the first-sighting aggregate), so its size is the corpus
-  * vocabulary of shingles, not the corpus. `compact()` rewrites the
-  * accumulated appends into few files, like the sink's compactor.
+  * vocabulary of shingles, not the corpus. The store is a
+  * [[ParquetStore]] handle: gated reads and appends, and a `compact()`
+  * that rewrites the accumulated appends into few files.
   *
   * The scored result is eagerly materialized (localCheckpoint) BEFORE
   * the append: scoring reads the store lazily, and parquet listings
@@ -41,17 +42,11 @@ import graft.functions.TextHash
   */
 final class NoveltyStore(spark: SparkSession, storeDir: String) {
 
-  /** The store is valid ONLY under a `_SUCCESS` job-commit marker
-    * (every successful append/compact rewrites one) — see
-    * [[ParquetStore.gatedExists]] for the full crash-window contract
-    * (mirroring Main.index's codebook gate). */
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "novelty store")
+  private val store = new ParquetStore(spark, storeDir, "novelty store")
 
   /** The stored shingle hashes (empty frame before the first record). */
   def seenShingles: DataFrame =
-    if (storeExists) spark.read.parquet(storeDir)
-    else spark.range(0).select(col("id").as("hs"))
+    store.read(spark.range(0).select(col("id").as("hs")))
 
   /** Score `docs` against everything seen so far, then record this
     * batch's shingles. Output per doc (docs under 3 tokens have no
@@ -78,28 +73,11 @@ final class NoveltyStore(spark: SparkSession, storeDir: String) {
       .localCheckpoint(true) // materialize BEFORE the store grows
     val newHs = firstInBatch.select(col("hs"))
       .join(seenShingles, Seq("hs"), "left_anti")
-    newHs.write.mode(SaveMode.Append).parquet(storeDir)
+    store.append(newHs)
     scored
   }
 
-  /** Rewrite the accumulated per-batch appends into few SIZED files —
-    * the store's analog of [[IncrementalSink.compact]], and the same
-    * crash discipline: the compacted copy is written to a TEMP
-    * directory off the live store (never overwriting the only copy —
-    * the pre-r8 in-place rewrite read through non-replicated
-    * localCheckpoint blocks, so an executor loss mid-write destroyed
-    * the store on a real cluster), then swapped in with two renames.
-    * File count is size-aware (`ceil(bytes / 128 MiB)`, the shared
-    * [[ParquetStore.compact]] rule) — the store is the corpus's
-    * distinct shingle vocabulary, billions of rows at 100 TB, and a
-    * single-task `coalesce(1)` rewrite would both serialize the job
-    * and emit one giant file.
-    *
-    * Crash windows self-heal on the next call, exactly like the sink:
-    * stale `.compact_tmp` → deleted, rewrite restarts; `.compact_old`
-    * with the store missing (died between renames) → old restored;
-    * `.compact_old` beside a live store (died before cleanup) →
-    * leftover deleted. Returns (files before, files after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, seenShingles)
+  /** Rewrite the accumulated per-batch appends into few sized files
+    * ([[ParquetStore.compact]]). Returns (files before, files after). */
+  def compact(): (Long, Long) = store.compact(seenShingles)
 }

@@ -6,44 +6,62 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, Metadata, StructType}
 
-/** Shared durability discipline for append-only parquet STORES (the
-  * novelty shingle store, the LSH signature index): `_SUCCESS`-gated
-  * validity, and the temp-path-then-verified-swap compaction whose
-  * rename handling treats `FileSystem.rename` as what it is on HDFS —
-  * an operation that reports most failures by RETURNING FALSE, not by
-  * throwing. Every store and the warehouse sink ([[IncrementalSink]])
-  * share this one audited copy of the crash-window logic instead of
-  * re-growing their own.
+/** The one handle every append-only parquet writer holds: each table
+  * of the warehouse sink ([[IncrementalSink]]) and every store (the
+  * sketch stores, [[KmvStore]], [[DfStore]], [[ChecksumStore]],
+  * [[NoveltyStore]], [[LshIndex]], [[WinnowIndex]], the fingerprint
+  * stores). It is opened on a directory and the name its errors use,
+  * plus the partition columns the data is laid out by and the shape
+  * metadata the store stamps on one column (`stamp`: column → shape
+  * keys and values, e.g. `cnt` → `cm_width`, `cm_depth`). These
+  * operations are the whole durability discipline, so no store
+  * re-grows a copy of it:
+  *
+  *  - [[exists]]: committed data under a `_SUCCESS` job-commit marker,
+  *    THROWING on a torn append and in every crash window of
+  *    [[compact]];
+  *  - [[read]]: the rows, with the schema read on the driver from one
+  *    data file's footer, so no job infers it, and the stamp checked
+  *    against that schema;
+  *  - [[append]]: gated first, so in a crash window it throws instead
+  *    of creating a fresh committed directory beside `.compact_old`
+  *    (whose rows the next heal would then discard); refuses a shape
+  *    mismatch before any byte lands; writes stamped and partitioned;
+  *  - [[compact]]: the temp-write-then-verified-swap rewrite, which
+  *    heals any crash window of a previous run first.
+  *
+  * Renames are treated as what `FileSystem.rename` is on HDFS: an
+  * operation that reports most failures by RETURNING FALSE, not by
+  * throwing.
   */
-private[etl] object ParquetStore {
+private[graft] final class ParquetStore(spark: SparkSession, dir: String,
+    what: String, partCols: Seq[String] = Nil,
+    stamp: Option[(String, Metadata)] = None) {
+  import ParquetStore._
 
-  def hfs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val store = new Path(dir)
+  private val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val tmp = new Path(dir + ".compact_tmp")
+  private val old = new Path(dir + ".compact_old")
 
-  /** True iff the store directory holds committed data: data files
-    * under a `_SUCCESS` job-commit marker. Data without the marker
-    * (a writer died between task commit and job commit) FAILS loudly —
-    * reading partial state would silently shift results. A crashed
-    * compact leaves `.compact_old`; that heals by re-running compact,
-    * and the error says so. `what` names the component in messages. */
-  def gatedExists(spark: SparkSession, storeDir: String,
-      what: String): Boolean = {
-    val d = new Path(storeDir)
-    val fs = hfs(spark, d)
-    val old = new Path(storeDir + ".compact_old")
-    if (!fs.exists(d)) {
+  /** True iff the directory holds committed data: data files under a
+    * `_SUCCESS` job-commit marker. Data without the marker (a writer
+    * died between task commit and job commit) FAILS loudly — reading
+    * partial state would silently shift results. A crashed compact
+    * leaves `.compact_old`; that heals by re-running compact, and the
+    * error says so. */
+  def exists: Boolean =
+    if (!fs.exists(store)) {
       if (fs.exists(old)) throw new IllegalStateException(
-        s"$what $storeDir missing but $old exists — a compact() " +
+        s"$what $dir missing but $old exists — a compact() " +
           "crashed mid-swap; call compact() to heal before reading")
       false
     } else {
-      val entries = fs.listStatus(d).filterNot { s =>
-        val n = s.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
-      val committed = entries.nonEmpty && fs.exists(new Path(d, "_SUCCESS"))
+      val entries = fs.listStatus(store).filter(visible)
+      val committed = entries.nonEmpty &&
+        fs.exists(new Path(store, "_SUCCESS"))
       if (committed) true
       else if (fs.exists(old)) throw new IllegalStateException(
         // an uncommitted (or empty) live copy BESIDE old is the
@@ -51,33 +69,88 @@ private[etl] object ParquetStore {
         // old, and reporting "store empty" here would let a reader
         // silently see nothing while the last complete copy waits —
         // compact() restores it
-        s"$what $storeDir is uncommitted but $old exists — a " +
+        s"$what $dir is uncommitted but $old exists — a " +
           "compact() crashed mid-swap; call compact() to heal before " +
           "reading")
       else if (entries.isEmpty) false
       else throw new IllegalStateException(
-        s"$what $storeDir has data files but no _SUCCESS marker " +
+        s"$what $dir has data files but no _SUCCESS marker " +
           "— a prior append crashed before job commit; rebuild the " +
           "store (delete the directory and re-ingest) rather than " +
           "reading partial state")
     }
+
+  /** Whether [[compact]] has anything to keep: a non-empty directory
+    * or a crashed compact's `.compact_old` copy. Unlike [[exists]] it
+    * never throws, so a maintenance pass can find the stores to heal. */
+  def present: Boolean = fs.exists(old) ||
+    fs.exists(store) && fs.listStatus(store).nonEmpty
+
+  /** The stored rows, or `empty` before the first committed write.
+    * The schema is the one a data file's footer carries, read on the
+    * driver: no job infers it. Partition columns are still discovered
+    * from the paths. A store built at another shape fails here. */
+  def read(empty: => DataFrame): DataFrame =
+    if (!exists) empty
+    else {
+      val df = footerSchema.fold(spark.read)(spark.read.schema).parquet(dir)
+      checkShape(df.schema)
+      df
+    }
+
+  /** Append `df`, stamped. Throws in a crash window (the gate), and on
+    * a shape mismatch or a missing partition column before any byte is
+    * written. */
+  def append(df: DataFrame): Unit = {
+    if (exists && stamp.nonEmpty) footerSchema.foreach(checkShape)
+    write(df, SaveMode.Append)
   }
 
-  /** The Spark schema `dir`'s data was written with, read on the
-    * driver from one data file's footer (Spark's own footer inference
-    * runs a job for this); None when there is no data file or its
-    * footer carries no Spark schema. */
-  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val fs = hfs(spark, new Path(dir))
-    def visible(s: FileStatus) = !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith(".")
+  /** Replace the directory's contents with `df` (a full refresh). */
+  def overwrite(df: DataFrame): Unit = write(df, SaveMode.Overwrite)
+
+  /** Partitioned write when the store has partition columns. A declared
+    * partition column MISSING from the frame fails loudly: silently
+    * writing unpartitioned files into a partitioned directory corrupts
+    * its layout (mixed root-level and `col=.../` files break partition
+    * discovery on the next read). */
+  private def write(df: DataFrame, mode: SaveMode): Unit = {
+    val missing = partCols.filterNot(df.columns.contains)
+    require(missing.isEmpty,
+      s"$what declares partition columns $partCols but the frame lacks $missing")
+    val w = stamped(df).write.mode(mode)
+    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(dir)
+  }
+
+  private def stamped(df: DataFrame): DataFrame = stamp.fold(df) {
+    case (c, meta) => df.withColumn(c, col(c).as(c, meta))
+  }
+
+  /** Refuse a store whose stamp column was built at another shape. */
+  private def checkShape(schema: StructType): Unit = stamp.foreach {
+    case (c, meta) =>
+      val want = shape(meta)
+      val stored = schema.find(_.name == c).map(f => shape(f.metadata).toMap)
+        .getOrElse(Map.empty[String, Any])
+      val built = want.flatMap { case (k, _) => stored.get(k).map(k -> _) }
+      def show(kv: Seq[(String, Any)]) =
+        kv.map { case (k, v) => s"$k=$v" }.mkString(", ")
+      require(built.isEmpty || built == want,
+        s"$what $dir was built at ${show(built)} but opened at " +
+          s"${show(want)} — open with the build shape")
+  }
+
+  /** The Spark schema the data was written with, read on the driver
+    * from one data file's footer (Spark's own footer inference runs a
+    * job for this); None when there is no data file or its footer
+    * carries no Spark schema. */
+  private def footerSchema: Option[StructType] = {
     def firstFile(p: Path): Option[Path] =
       fs.listStatus(p).iterator.filter(visible).map { s =>
         if (s.isDirectory) firstFile(s.getPath)
         else Some(s.getPath).filter(_.getName.endsWith(".parquet"))
       }.collectFirst { case Some(f) => f }
-    val d = new Path(dir)
-    (if (fs.exists(d)) firstFile(d) else None).flatMap { f =>
+    (if (fs.exists(store)) firstFile(store) else None).flatMap { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f,
         spark.sparkContext.hadoopConfiguration))
       try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
@@ -86,35 +159,29 @@ private[etl] object ParquetStore {
     }.map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
-  /** Size one compacted file aims for. */
-  private val TargetFileBytes = 128L << 20
-
-  /** Rewrite the accumulated per-batch appends into few SIZED files
-    * (`ceil(bytes / 128 MiB)` — a single-task `coalesce(1)` rewrite
-    * would both serialize the job and emit one giant file). A table
-    * with `partCols` is co-partitioned by them and rewritten with the
-    * same `partitionBy` layout, so each task writes few directories
-    * and partition pruning survives. The compacted copy goes to a TEMP
-    * directory off the live store, then swaps in with two VERIFIED
-    * renames; `old` (the last complete copy until the swap proves
-    * itself) is only deleted once the live path exists and holds
+  /** Rewrite the accumulated per-batch appends of `rows` (the store's
+    * merge-on-compact frame, or its rows as stored) into few SIZED
+    * files (`ceil(bytes / 128 MiB)` — a single-task `coalesce(1)`
+    * rewrite would both serialize the job and emit one giant file). A
+    * store with partition columns is co-partitioned by them and
+    * rewritten with the same `partitionBy` layout, so each task writes
+    * few directories and partition pruning survives. The compacted copy
+    * goes to a TEMP directory off the live store, then swaps in with
+    * two VERIFIED renames; `old` (the last complete copy until the swap
+    * proves itself) is only deleted once the live path exists and holds
     * committed parquet files (at any depth — partition directories
-    * count). Crash windows self-heal on the next call: stale
-    * `.compact_tmp` → deleted; `.compact_old` with the store missing
-    * (died between renames) → old restored; `.compact_old` beside a
-    * live store → leftover deleted. With `skipIfCompact`, for a store
-    * whose `read` is its rows as stored (a merge-on-compact store
-    * rewrites to merge rows, so it never skips), a committed store the
-    * rewrite could not shrink (at most `ceil(bytes / 128 MiB)` files,
-    * or one file per partition directory) is left unread and returns
-    * (n, n). Returns (files before, files after). */
-  def compact(spark: SparkSession, storeDir: String, read: => DataFrame,
-      partCols: Seq[String] = Nil, skipIfCompact: Boolean = false)
+    * count). Crash windows self-heal on the next call, before `rows` is
+    * evaluated: stale `.compact_tmp` → deleted; `.compact_old` with the
+    * store missing (died between renames) or uncommitted → old
+    * restored; `.compact_old` beside a committed store → leftover
+    * deleted. With `skipIfCompact`, for a store whose `rows` are its
+    * rows as stored (a merge-on-compact store rewrites to merge rows,
+    * so it never skips), a committed store the rewrite could not shrink
+    * (at most `ceil(bytes / 128 MiB)` files, or one file per partition
+    * directory) is left unread and returns (n, n). Returns (files
+    * before, files after). */
+  def compact(rows: => DataFrame, skipIfCompact: Boolean = false)
       : (Long, Long) = {
-    val store = new Path(storeDir)
-    val fs = hfs(spark, store)
-    val tmp = new Path(storeDir + ".compact_tmp")
-    val old = new Path(storeDir + ".compact_old")
     def parquetFiles(p: Path): Seq[FileStatus] =
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).toSeq.flatMap { s =>
@@ -156,9 +223,10 @@ private[etl] object ParquetStore {
         else before.groupBy(_.getPath.getParent).values.forall(_.size == 1))
     if (alreadyCompact) (before.size.toLong, before.size.toLong)
     else {
+      val merged = stamped(rows)
       val w =
-        if (partCols.isEmpty) read.repartition(nFiles).write
-        else read.repartition(nFiles, partCols.map(col): _*).write
+        if (partCols.isEmpty) merged.repartition(nFiles).write
+        else merged.repartition(nFiles, partCols.map(col): _*).write
           .partitionBy(partCols: _*)
       w.mode(SaveMode.Overwrite).parquet(tmp.toString)
       def renameOrDie(src: Path, dst: Path): Unit =
@@ -177,4 +245,22 @@ private[etl] object ParquetStore {
       (before.size.toLong, after.size.toLong)
     }
   }
+}
+
+private object ParquetStore {
+
+  /** Size one compacted file aims for. */
+  private val TargetFileBytes = 128L << 20
+
+  private def visible(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** A column's metadata as ordered (key, value) pairs. */
+  private def shape(m: Metadata): Seq[(String, Any)] =
+    org.json4s.jackson.JsonMethods.parse(m.json) match {
+      case org.json4s.JObject(fields) => fields.map { case (k, v) => k -> v.values }
+      case _ => Nil
+    }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
@@ -22,10 +22,10 @@ import graft.operators.Sketch
   * data — ≤ depth·width rows for CMS regardless of corpus size, ≤
   * m rows per group for HLL regardless of cardinality — and the
   * merge-fold reads only those rows back. `compact()` rewrites the
-  * accumulated appends into the single merged grid via the shared
-  * verified-rename swap ([[ParquetStore.compact]]: `_SUCCESS`-gated
-  * reads, self-healing crash windows), after which the store holds one
-  * row per counter/register again.
+  * accumulated appends into the single merged grid, after which the
+  * store holds one row per counter/register again. Every store here
+  * holds a [[ParquetStore]] handle, which owns the gate, the reads,
+  * the appends and the crash-safe compaction.
   *
   * Shape parameters ride as column metadata (the [[Sketch.cmBuild]]
   * fail-fast pattern) so reopening a store at a mismatched
@@ -40,42 +40,24 @@ final class CmsStore(spark: SparkSession, storeDir: String,
     .putLong("cm_width", width.toLong)
     .putLong("cm_depth", Sketch.depth.toLong).build()
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "CMS store")
-
-  /** Parquet round-trips Spark column metadata, so the width the grid
-    * was BUILT at survives on `cnt` — reject a reopen at any other. */
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "cnt").map(_.metadata)
-      .filter(_.contains("cm_width")).foreach { m =>
-        require(m.getLong("cm_width") == width.toLong,
-          s"CMS store $storeDir was built at width=" +
-            s"${m.getLong("cm_width")} but opened at width=$width — " +
-            "estimates would mis-bucket; open with the build width")
-      }
-    df
-  }
+  // parquet round-trips Spark column metadata, so the width the grid
+  // was BUILT at survives on `cnt`
+  private val store = new ParquetStore(spark, storeDir, "CMS store",
+    stamp = Some("cnt" -> widthMeta))
 
   /** Append one batch's partial counter grid (≤ depth·width rows —
     * the batch is folded to its sketch BEFORE anything is written). */
-  def ingest(hashes: DataFrame, hashCol: String): Unit = {
-    if (storeExists) checkedRead() // fail fast on a width mismatch
-    Sketch.cmBuild(hashes, hashCol, width)
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+  def ingest(hashes: DataFrame, hashCol: String): Unit =
+    store.append(Sketch.cmBuild(hashes, hashCol, width))
 
   /** The merged sketch over everything ingested: counters SUM across
     * appended partial grids, ≤ depth·width rows, width metadata
     * re-stamped so [[Sketch.cmEstimate]]'s probe-width check holds. */
-  def sketch: DataFrame = {
-    val grid =
-      if (storeExists) checkedRead()
-      else spark.range(0).select(col("id").cast("int").as("r"),
-        col("id").as("b"), col("id").as("cnt"))
-    grid.groupBy(col("r"), col("b")).agg(sum(col("cnt")).as("cnt"))
+  def sketch: DataFrame =
+    store.read(spark.range(0).select(col("id").cast("int").as("r"),
+        col("id").as("b"), col("id").as("cnt")))
+      .groupBy(col("r"), col("b")).agg(sum(col("cnt")).as("cnt"))
       .select(col("r"), col("b"), col("cnt").as("cnt", widthMeta))
-  }
 
   /** Point estimates against the merged store ([[Sketch.cmEstimate]]:
     * broadcast grid, probes keep columns and multiplicity). */
@@ -83,9 +65,8 @@ final class CmsStore(spark: SparkSession, storeDir: String,
     Sketch.cmEstimate(probes, hashCol, sketch, width)
 
   /** Merge-on-compact: rewrite the appends into the single merged
-    * grid via the shared verified swap. Returns (files before, after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, sketch)
+    * grid. Returns (files before, after). */
+  def compact(): (Long, Long) = store.compact(sketch)
 }
 
 /** HLL register store — see [[CmsStore]]'s scaladoc for the shared
@@ -98,35 +79,15 @@ final class HllStore(spark: SparkSession, storeDir: String,
     s"m must be a power of two >= 16, got $m")
   require(wBits > 0 && wBits <= 56, s"need 0 < wBits <= 56, got $wBits")
 
-  private val shapeMeta = new MetadataBuilder()
-    .putLong("hll_m", m.toLong).putLong("hll_wbits", wBits.toLong).build()
-
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "HLL store")
-
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "mj").map(_.metadata)
-      .filter(_.contains("hll_m")).foreach { meta =>
-        require(meta.getLong("hll_m") == m.toLong &&
-          meta.getLong("hll_wbits") == wBits.toLong,
-          s"HLL store $storeDir was built at m=${meta.getLong("hll_m")}/" +
-            s"wBits=${meta.getLong("hll_wbits")} but opened at " +
-            s"m=$m/wBits=$wBits — registers would mis-bucket; open " +
-            "with the build shape")
-      }
-    df
-  }
+  private val store = new ParquetStore(spark, storeDir, "HLL store",
+    stamp = Some("mj" -> new MetadataBuilder().putLong("hll_m", m.toLong)
+      .putLong("hll_wbits", wBits.toLong).build()))
 
   /** Append one batch's register table (≤ m rows per group in the
     * batch; `hashCol` must satisfy [[Sketch.hllRegisters]]'s
     * non-negative `hash < m·2^wBits` contract). */
-  def ingest(rows: DataFrame, hashCol: String): Unit = {
-    if (storeExists) checkedRead() // fail fast on a shape mismatch
-    Sketch.hllRegisters(rows, groupCol, hashCol, m, wBits)
-      .select(col(groupCol), col("b"), col("mj").as("mj", shapeMeta))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+  def ingest(rows: DataFrame, hashCol: String): Unit =
+    store.append(Sketch.hllRegisters(rows, groupCol, hashCol, m, wBits))
 
   /** The merged register table: keyed max across appended batches —
     * exactly [[Sketch.hllRegisters]] over the union of everything
@@ -134,13 +95,10 @@ final class HllStore(spark: SparkSession, storeDir: String,
     * group column as string; the first ingest fixes the schema from
     * the data, and the empty frame is never joined against (the
     * LshIndex empty-store rule). */
-  def registers: DataFrame = {
-    val regs =
-      if (storeExists) checkedRead()
-      else spark.range(0).select(col("id").cast("string").as(groupCol),
-        col("id").as("b"), col("id").cast("int").as("mj"))
-    regs.groupBy(col(groupCol), col("b")).agg(max(col("mj")).as("mj"))
-  }
+  def registers: DataFrame =
+    store.read(spark.range(0).select(col("id").cast("string").as(groupCol),
+        col("id").as("b"), col("id").cast("int").as("mj")))
+      .groupBy(col(groupCol), col("b")).agg(max(col("mj")).as("mj"))
 
   /** Per-group cardinality estimates from the merged registers —
     * ≡ [[Sketch.hllDistinct]] over the union of everything ingested. */
@@ -148,11 +106,7 @@ final class HllStore(spark: SparkSession, storeDir: String,
     Sketch.hllEstimateFromRegisters(registers, groupCol, m, wBits)
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(): (Long, Long) = {
-    val merged = registers
-      .select(col(groupCol), col("b"), col("mj").as("mj", shapeMeta))
-    ParquetStore.compact(spark, storeDir, merged)
-  }
+  def compact(): (Long, Long) = store.compact(registers)
 }
 
 /** Grid-percentile bin store — the third mergeable sketch under the
@@ -175,40 +129,19 @@ final class GridStore(spark: SparkSession, storeDir: String,
   require(graft.operators.Profiling.isDyadic(width),
     s"GridStore width must be a power of two, got $width")
 
-  private val widthMeta = new MetadataBuilder()
-    .putDouble("grid_width", width).build()
-
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "grid store")
-
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "n").map(_.metadata)
-      .filter(_.contains("grid_width")).foreach { m =>
-        require(m.getDouble("grid_width") == width,
-          s"grid store $storeDir was built at width=" +
-            s"${m.getDouble("grid_width")} but opened at width=$width " +
-            "— bins would mis-align; open with the build width")
-      }
-    df
-  }
+  private val store = new ParquetStore(spark, storeDir, "grid store",
+    stamp = Some("n" -> new MetadataBuilder()
+      .putDouble("grid_width", width).build()))
 
   /** Append one batch's bin counters (≤ batch-range/width rows — the
     * batch folds to its sketch BEFORE anything is written). */
-  def ingest(rows: DataFrame, valueCol: String): Unit = {
-    if (storeExists) checkedRead() // fail fast on a width mismatch
-    graft.operators.Profiling.gridBins(rows, valueCol, width)
-      .select(col("bin"), col("n").as("n", widthMeta))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+  def ingest(rows: DataFrame, valueCol: String): Unit =
+    store.append(graft.operators.Profiling.gridBins(rows, valueCol, width))
 
   /** The merged counter frame: bin counts SUM across appends. */
-  def bins: DataFrame = {
-    val b =
-      if (storeExists) checkedRead()
-      else spark.range(0).select(col("id").as("bin"), col("id").as("n"))
-    b.groupBy(col("bin")).agg(sum(col("n")).as("n"))
-  }
+  def bins: DataFrame =
+    store.read(spark.range(0).select(col("id").as("bin"), col("id").as("n")))
+      .groupBy(col("bin")).agg(sum(col("n")).as("n"))
 
   /** Percentile answers over everything ingested — the one-shot
     * operator's answer stage on the merged counters. */
@@ -219,10 +152,7 @@ final class GridStore(spark: SparkSession, storeDir: String,
   }
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(): (Long, Long) = {
-    val merged = bins.select(col("bin"), col("n").as("n", widthMeta))
-    ParquetStore.compact(spark, storeDir, merged)
-  }
+  def compact(): (Long, Long) = store.compact(bins)
 }
 
 /** Durable Bloom-filter store — the decontamination gate's membership
@@ -239,7 +169,7 @@ final class GridStore(spark: SparkSession, storeDir: String,
   * Scale shape: what lands on disk per batch is the FILTER (~1.2
   * bytes/key at 1% fpp), never the keys; the driver-side merge folds
   * ≤ #appends blobs (bounded by `compact()`, which rewrites them into
-  * one row via the shared verified swap) and the merged bytes ride a
+  * one row) and the merged bytes ride a
   * broadcast VARIABLE into [[graft.functions.BloomMightContain]]'s
   * codegen'd row-local probe — the q76 rung, now with a persistent
   * between-runs set. False positives are the fpp trickle (callers
@@ -256,37 +186,22 @@ final class BloomStore(spark: SparkSession, storeDir: String,
   require(expectedItems > 0, s"need expectedItems > 0, got $expectedItems")
   require(fpp > 0.0 && fpp < 1.0, s"need 0 < fpp < 1, got $fpp")
 
-  private val shapeMeta = new MetadataBuilder()
-    .putLong("bloom_expected", expectedItems)
-    .putString("bloom_fpp", fpp.toString).build()
+  private val store = new ParquetStore(spark, storeDir, "Bloom store",
+    stamp = Some("bf" -> new MetadataBuilder()
+      .putLong("bloom_expected", expectedItems)
+      .putString("bloom_fpp", fpp.toString).build()))
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "Bloom store")
-
-  private def checkedRead(): DataFrame = {
-    val df = spark.read.parquet(storeDir)
-    df.schema.fields.find(_.name == "bf").map(_.metadata)
-      .filter(_.contains("bloom_expected")).foreach { m =>
-        require(m.getLong("bloom_expected") == expectedItems &&
-          m.getString("bloom_fpp") == fpp.toString,
-          s"Bloom store $storeDir was built at expectedItems=" +
-            s"${m.getLong("bloom_expected")}, fpp=${m.getString("bloom_fpp")}" +
-            s" but opened at ($expectedItems, $fpp) — merge would be " +
-            "incompatible; open with the build shape")
-      }
-    df
+  private def row(bytes: Array[Byte]): DataFrame = {
+    import spark.implicits._
+    Seq(Tuple1(bytes)).toDF("bf")
   }
 
   /** Append one batch's filter (ONE row of bytes, one corpus pass). */
   def ingest(keys: DataFrame, hashCol: String): Unit = {
-    if (storeExists) checkedRead() // fail fast on a shape mismatch
     val bf = keys.stat.bloomFilter(hashCol, expectedItems, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
-    import spark.implicits._
-    Seq(Tuple1(bos.toByteArray)).toDF("bf")
-      .select(col("bf").as("bf", shapeMeta))
-      .write.mode(SaveMode.Append).parquet(storeDir)
+    store.append(row(bos.toByteArray))
   }
 
   /** The merged filter bytes over everything ingested (OR-fold of the
@@ -294,10 +209,8 @@ final class BloomStore(spark: SparkSession, storeDir: String,
     * shape, which reports every probe as a miss). */
   def filterBytes(): Array[Byte] = {
     import org.apache.spark.util.sketch.BloomFilter
-    val blobs: Array[Array[Byte]] =
-      if (storeExists) checkedRead().select(col("bf"))
-        .collect().map(_.getAs[Array[Byte]](0))
-      else Array.empty
+    val blobs = store.read(row(Array.emptyByteArray).limit(0))
+      .select(col("bf")).collect().map(_.getAs[Array[Byte]](0))
     val merged = blobs.foldLeft(
       BloomFilter.create(expectedItems, fpp)) { (acc, b) =>
       acc.mergeInPlace(BloomFilter.readFrom(
@@ -319,14 +232,9 @@ final class BloomStore(spark: SparkSession, storeDir: String,
         org.apache.spark.sql.GraftColumns.expr(col(hashCol)))))
   }
 
-  /** Merge-on-compact: rewrite the appends into ONE merged row via
-    * the shared verified swap. Returns (files before, after). */
-  def compact(): (Long, Long) = {
-    import spark.implicits._
-    val merged = Seq(Tuple1(filterBytes())).toDF("bf")
-      .select(col("bf").as("bf", shapeMeta))
-    ParquetStore.compact(spark, storeDir, merged)
-  }
+  /** Merge-on-compact: rewrite the appends into ONE merged row.
+    * Returns (files before, after). */
+  def compact(): (Long, Long) = store.compact(row(filterBytes()))
 }
 
 /** Mergeable trend store — the [[GridStore]] discipline applied to
@@ -344,31 +252,22 @@ final class BloomStore(spark: SparkSession, storeDir: String,
   * scheduler's contract (counters, the CMS caveat). */
 final class TrendStore(spark: SparkSession, storeDir: String) {
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "trend store")
+  private val store = new ParquetStore(spark, storeDir, "trend store")
 
   /** Append one batch's per-(key, day) counts (one corpus pass,
     * ≤ |keys|·|batch days| rows land). `dayCol` must be DATE-typed or
     * castable. */
-  def ingest(df: DataFrame, keyCol: String, dayCol: String): Unit = {
-    storeExists // the gate THROWS in a compact() crash window — an
-    // append there would create a fresh committed dir beside
-    // .compact_old and let the next heal discard the pre-crash counts
-    df.select(col(keyCol).cast("string").as("key"),
+  def ingest(df: DataFrame, keyCol: String, dayCol: String): Unit =
+    store.append(df.select(col(keyCol).cast("string").as("key"),
         datediff(col(dayCol).cast("date"),
           to_date(lit("1970-01-01"))).as("d"))
-      .groupBy(col("key"), col("d")).agg(count(lit(1)).as("c"))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-  }
+      .groupBy(col("key"), col("d")).agg(count(lit(1)).as("c")))
 
   /** The merged daily frame over everything ingested. */
-  def dailyCounts: DataFrame = {
-    val b =
-      if (storeExists) spark.read.parquet(storeDir)
-      else spark.range(0).select(col("id").cast("string").as("key"),
-        col("id").cast("int").as("d"), col("id").as("c"))
-    b.groupBy(col("key"), col("d")).agg(sum(col("c")).as("c"))
-  }
+  def dailyCounts: DataFrame =
+    store.read(spark.range(0).select(col("id").cast("string").as("key"),
+        col("id").cast("int").as("d"), col("id").as("c")))
+      .groupBy(col("key"), col("d")).agg(sum(col("c")).as("c"))
 
   /** Per-key OLS slopes over the merged store — the one-shot fit
     * stage ([[graft.operators.Trend]]) on [[dailyCounts]]. */
@@ -389,7 +288,6 @@ final class TrendStore(spark: SparkSession, storeDir: String) {
       horizonDays)
 
   /** Merge-on-compact ([[CmsStore.compact]]). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, dailyCounts)
+  def compact(): (Long, Long) = store.compact(dailyCounts)
 }
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -31,7 +31,7 @@ import graft.operators.Dedup
   * the batch; the store holds (doc_id, fp) rows — the sampled
   * selection, never the full shingle stream — so the probe is one
   * `fp` hash equi-join; `compact()` rewrites appends into sized files
-  * via the shared [[ParquetStore]] swap. The probe result is eagerly
+  * through the store's [[ParquetStore]] handle. The probe result is eagerly
   * materialized (localCheckpoint) BEFORE the append — the LshIndex
   * lazy-listing rule: without the cut a late consumer would see the
   * batch's own rows in the store and pair every doc with itself. */
@@ -39,14 +39,12 @@ final class WinnowIndex(spark: SparkSession, storeDir: String,
     span: Int = 3, window: Int = 4, minShared: Int = 2) {
   require(minShared >= 1, s"need minShared >= 1, got $minShared")
 
-  private def storeExists: Boolean =
-    ParquetStore.gatedExists(spark, storeDir, "winnow index")
+  private val store = new ParquetStore(spark, storeDir, "winnow index")
 
   /** The stored fingerprints (empty before the first record). */
   def storedFingerprints: DataFrame =
-    if (storeExists) spark.read.parquet(storeDir)
-    else spark.range(0).select(col("id").as("doc_id"),
-      col("id").as("fp"))
+    store.read(spark.range(0).select(col("id").as("doc_id"),
+      col("id").as("fp")))
 
   /** Probe `batch` against everything recorded so far, then record
     * this batch's fingerprints. Returns (doc_a, doc_b, n_shared)
@@ -58,8 +56,7 @@ final class WinnowIndex(spark: SparkSession, storeDir: String,
     val picks = Dedup
       .winnowFingerprints(batch, idCol, textCol, span, window)
       .localCheckpoint(true) // one selection pass feeds probe + append
-    val stored = if (storeExists) spark.read.parquet(storeDir)
-      else picks.limit(0)
+    val stored = store.read(picks.limit(0))
     val vsStore = picks.select(col("doc_id").as("doc_b"), col("fp"))
       .join(stored.select(col("doc_id").as("doc_a"), col("fp")),
         Seq("fp"))
@@ -74,12 +71,11 @@ final class WinnowIndex(spark: SparkSession, storeDir: String,
       .where(col("n_shared") >= minShared)
       .orderBy(col("doc_a"), col("doc_b"))
       .localCheckpoint(true) // materialize BEFORE the store grows
-    picks.write.mode(SaveMode.Append).parquet(storeDir)
+    store.append(picks)
     pairs
   }
 
-  /** Rewrite accumulated appends into sized files — the shared
-    * [[ParquetStore.compact]] swap. Returns (files before, after). */
-  def compact(): (Long, Long) =
-    ParquetStore.compact(spark, storeDir, storedFingerprints)
+  /** Rewrite accumulated appends into sized files
+    * ([[ParquetStore.compact]]). Returns (files before, after). */
+  def compact(): (Long, Long) = store.compact(storedFingerprints)
 }

@@ -76,10 +76,20 @@ object Profiling {
     * them to ≤ |cols|·|buckets| rows per task), then one tiny shuffle.
     * Per-column groupBys would scan the table |cols| times instead. */
   def histogram(df: DataFrame, widths: Seq[(String, Double)]): DataFrame =
+    bucketCounts(df, widths)
+      .orderBy(col("column_name"), col("bucket").asc_nulls_first)
+
+  /** [[histogram]] without its sort: the (column_name, bucket,
+    * bucket_lo, n_rows) counters, over a batch or a streaming frame (a
+    * streaming aggregation cannot sort before its sink). Over a stream,
+    * run with `outputMode("complete")` or `update`: the counters are
+    * cumulative, and their state is |columns|·|buckets| rows however
+    * many events flow through. */
+  def bucketCounts(df: DataFrame, widths: Seq[(String, Double)])
+      : DataFrame =
     bucketEntries(df, widths)
       .groupBy(col("column_name"), col("bucket"), col("bucket_lo"))
       .agg(count(lit(1)).as("n_rows"))
-      .orderBy(col("column_name"), col("bucket").asc_nulls_first)
 
   /** Equi-depth (quantile-bucket) histograms — [[histogram]]'s other
     * half: equi-WIDTH shows the shape of a distribution on a fixed
@@ -166,8 +176,8 @@ object Profiling {
 
   /** The row-local half of [[histogram]]: one (column_name, bucket,
     * bucket_lo) row per (input row × profiled column), pre-aggregation.
-    * Shared with the streaming twin ([[graft.streaming.HistogramStream]])
-    * so both execution modes bucket identically by construction. */
+    * Shared with [[graft.operators.Drift]]'s binning, so both bucket
+    * identically by construction. */
   private[graft] def bucketEntries(df: DataFrame,
       widths: Seq[(String, Double)]): DataFrame = {
     require(widths.nonEmpty, "histogram needs at least one column")

@@ -140,8 +140,8 @@ object Sketch {
     * `max` — associative, commutative, idempotent — which is what
     * makes HLL the mergeable/streamable sketch: re-feeding the same
     * keys can never move a register, and a streaming aggregation holds
-    * exactly these ≤ m rows per group as its bounded state
-    * ([[graft.streaming.HllStream]]). */
+    * exactly these ≤ m rows per group as its bounded state (run with
+    * `outputMode("complete")` or `update` over a stream). */
   def hllRegisters(rows: DataFrame, groupCol: String, hashCol: String,
       m: Int = 256, wBits: Int = 52): DataFrame = {
     require(m >= 16 && (m & (m - 1)) == 0,

@@ -33,4 +33,42 @@ class SqlFunctionsSpec extends SparkSpec {
       .orderBy("vec_id").collect()
     assert(viaSql.toSeq == viaCol.toSeq)
   }
+
+  test("tune registers the graft_* functions once per session") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.atomic.AtomicInteger()
+    val capture = new AbstractAppender("graft-replaced-fn", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+            .contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
+    }
+    capture.start()
+    val registry = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[Logger]
+    registry.addAppender(capture)
+    try {
+      GraftSession.tune(spark)
+      replaced.set(0)
+      GraftSession.tune(spark) // a tuned session: nothing re-registered
+      assert(replaced.get == 0, s"${replaced.get} functions re-registered")
+      // the capture sees the WARN when a registration does replace
+      GraftSession.registerFunctions(spark)
+      assert(replaced.get == 11, s"${replaced.get} replacement WARNs")
+    } finally {
+      registry.removeAppender(capture)
+      capture.stop()
+    }
+    // a fresh session has none of them until tune registers them
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_dot_product"))
+    GraftSession.tune(fresh)
+    assert(fresh.sql("SELECT graft_dot_product(array(1.0D), array(2.0D))")
+      .collect().head.getDouble(0) == 2.0)
+  }
 }

@@ -224,30 +224,39 @@ class IncrementalSinkSpec extends SparkSpec {
     import java.nio.file.Paths
     // unpartitioned, and partitioned with a null key: the rewrite keeps
     // the layout and the null row's __HIVE_DEFAULT_PARTITION__ directory
-    // counts as committed data
-    for (partCols <- Seq(Nil, Seq("v"))) {
+    // counts as committed data. The unpartitioned table is a star table,
+    // so `Main compact` can heal it; no star table is partitioned by `v`.
+    for ((t, partCols) <- Seq("dim_sedes" -> Nil, "t" -> Seq("v"))) {
       val whDir = Files.createTempDirectory("graft_sink_crash").toString
       val sink = new IncrementalSink(spark, whDir,
-        partitioning = Map("t" -> partCols))
-      sink.appendOnlyNew(df(Row(1, "a"), Row(2, null)), "t", "pk")
-      val dir = Paths.get(s"$whDir/t")
-      val tmp = Paths.get(s"$whDir/t.compact_tmp")
-      val old = Paths.get(s"$whDir/t.compact_old")
+        partitioning = Map(t -> partCols), varcharLimits = Map.empty)
+      sink.appendOnlyNew(df(Row(1, "a"), Row(2, null)), t, "pk")
+      val dir = Paths.get(s"$whDir/$t")
+      val tmp = Paths.get(s"$whDir/$t.compact_tmp")
+      val old = Paths.get(s"$whDir/$t.compact_old")
       // window 1: stale tmp from a run that died mid-write
       Files.createDirectories(tmp)
       Files.write(tmp.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-      sink.compact("t")
+      sink.compact(t)
       assert(!Files.exists(tmp) && !Files.exists(old))
-      assert(sink.read("t").count() == 2)
-      // window 2: died between the moves — table dir GONE, data only in old
+      assert(sink.read(t).count() == 2)
+      // window 2: died between the moves — table dir GONE, data only in
+      // old. A load there throws: it would create a fresh committed dir
+      // that the next heal keeps, discarding old and the rows in it.
       Files.move(dir, old)
-      sink.compact("t")
-      assert(sink.read("t").count() == 2 && !Files.exists(old))
+      val e = intercept[IllegalStateException] {
+        sink.appendOnlyNew(df(Row(3, "c")), t, "pk")
+      }
+      assert(e.getMessage.contains("compact() to heal"), e.getMessage)
+      assert(!Files.exists(dir))
+      if (StarSchema.loadOrder.contains(t)) graft.Main.runCompact(spark, whDir)
+      else sink.compact(t)
+      assert(sink.read(t).count() == 2 && !Files.exists(old))
       // window 3: died after the swap, before cleanup — stale old beside live
       Files.createDirectories(old)
       Files.write(old.resolve("leftover.parquet"), Array[Byte](1))
-      sink.compact("t")
-      assert(sink.read("t").count() == 2 && !Files.exists(old))
+      sink.compact(t)
+      assert(sink.read(t).count() == 2 && !Files.exists(old))
       if (partCols.nonEmpty)
         assert(Files.exists(dir.resolve("v=__HIVE_DEFAULT_PARTITION__")))
     }

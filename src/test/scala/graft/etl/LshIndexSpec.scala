@@ -117,4 +117,21 @@ class LshIndexSpec extends SparkSpec {
         "d%06d".format(r.getLong(1)))).toSet
     assert((p1 ++ p2) == expected)
   }
+
+  test("building the stored-signature frame runs no Spark job") {
+    // the schema comes from a data file's footer, read on the driver;
+    // spark.read.parquet's schema inference would run a job here
+    val dir = Files.createTempDirectory("graft_lsh_idx5").toString + "/store"
+    val idx = new LshIndex(spark, dir)
+    idx.probeAndRecord(Tables.documents(spark, sf).where(col("doc_id") < 50),
+      "doc_id", "text").collect()
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    sc.setJobGroup("lsh store read", "lsh store read")
+    val stored = try idx.storedSignatures finally sc.clearJobGroup()
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("lsh store read").isEmpty)
+    assert(stored.columns.toSeq == Seq("doc_id", "band", "sig"))
+    assert(stored.count() > 0)
+  }
 }

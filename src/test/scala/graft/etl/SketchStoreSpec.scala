@@ -13,6 +13,7 @@ import graft.operators.Sketch
   * re-delivery must be a no-op, and a shape-mismatched reopen must
   * fail fast instead of silently mis-bucketing. */
 class SketchStoreSpec extends SparkSpec {
+  import SketchStoreSpec.AppendPath
 
   // an occurrence stream with deliberate duplicates: 600 rows over
   // 200 distinct hashes, every hash small enough for the HLL contract
@@ -224,25 +225,102 @@ class SketchStoreSpec extends SparkSpec {
     assert(n == 1L) // one key in batch 1
   }
 
-  test("Trend: ingest into a compact crash window THROWS instead of " +
-    "creating a fresh store beside the preserved copy") {
-    val s3 = spark; import s3.implicits._
-    val base = Files.createTempDirectory("graft_trend_crash").toString
-    val store = new TrendStore(spark, s"$base/store")
-    val batch = Seq(("A", "2024-01-01")).toDF("k", "day")
-      .select(col("k"), to_date(col("day")).as("day"))
-    store.ingest(batch, "k", "day")
-    // simulate the mid-swap crash: live dir renamed away to .compact_old
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$base/store"),
-      new org.apache.hadoop.fs.Path(s"$base/store.compact_old"))
-    val e = intercept[IllegalStateException] {
-      store.ingest(batch, "k", "day")
-    }
-    assert(e.getMessage.contains("compact"))
-    // the preserved copy is untouched
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$base/store.compact_old")))
+  // -- every store handle's append path in a compact() crash window
+
+  private def docs = {
+    val s = spark; import s.implicits._
+    Seq((1L, "the quick brown fox jumps over the lazy dog again"),
+      (2L, "a quick brown fox jumps over the lazy dog once more"))
+      .toDF("doc_id", "text")
   }
+
+  /** Fingerprint rows of the media stores' shape. */
+  private def fps(cols: String*) =
+    spark.range(4).select(cols.map(c => col("id").as(c)): _*)
+
+  private def sorted(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private val appendPaths: Seq[(String, String => AppendPath)] = Seq(
+    "CMS" -> { d => val s = new CmsStore(spark, d, width = 64)
+      AppendPath(() => s.ingest(hashes, "h"), () => sorted(s.sketch),
+        () => s.compact()) },
+    "HLL" -> { d => val s = new HllStore(spark, d, "grp", m = 16, wBits = 20)
+      AppendPath(() => s.ingest(hashes, "h"), () => sorted(s.registers),
+        () => s.compact()) },
+    "Grid" -> { d => val s = new GridStore(spark, d, width = 0.5)
+      AppendPath(() => s.ingest(values, "v"), () => sorted(s.bins),
+        () => s.compact()) },
+    "Bloom" -> { d => val s = new BloomStore(spark, d, expectedItems = 1000L)
+      AppendPath(() => s.ingest(hashes, "h"),
+        () => Seq(s.filterBytes().mkString(",")), () => s.compact()) },
+    "Trend" -> { d => val s = new TrendStore(spark, d)
+      AppendPath(() => s.ingest(docs.select(col("doc_id"),
+          to_date(lit("2024-01-01")).as("day")), "doc_id", "day"),
+        () => sorted(s.dailyCounts), () => s.compact()) },
+    "KMV" -> { d => val s = new KmvStore(spark, d, 16)
+      AppendPath(() => s.ingest(docs, "doc_id", "text"),
+        () => sorted(s.sketches), () => s.compact()) },
+    "Df" -> { d => val s = new DfStore(spark, d, n = 3)
+      AppendPath(() => s.ingest(docs, "doc_id", "text"),
+        () => sorted(s.dfCounts), () => s.compact()) },
+    "Checksum" -> { d => val s = new ChecksumStore(spark, d)
+      AppendPath(() => s.ingest(docs, "doc_id", "text"),
+        () => sorted(s.fingerprint), () => s.compact()) },
+    "Novelty" -> { d => val s = new NoveltyStore(spark, d)
+      AppendPath(() => s.scoreAndRecord(docs, "doc_id", "text").collect(),
+        () => sorted(s.seenShingles), () => s.compact()) },
+    "LSH" -> { d => val s = new LshIndex(spark, d)
+      AppendPath(() => s.probeAndRecord(docs, "doc_id", "text").collect(),
+        () => sorted(s.storedSignatures), () => s.compact()) },
+    "Winnow" -> { d => val s = new WinnowIndex(spark, d)
+      AppendPath(() => s.probeAndRecord(docs, "doc_id", "text").collect(),
+        () => sorted(s.storedFingerprints), () => s.compact()) },
+    "Dhash" -> { d => val s = new DhashStore(spark, d)
+      AppendPath(() => s.ingestFrame(fps("doc_id", "fp")),
+        () => sorted(s.fingerprints), () => s.compact()) },
+    "AudioFp" -> { d => val s = new AudioFpStore(spark, d)
+      AppendPath(() => s.ingestFrame(fps("doc_id", "fp")),
+        () => sorted(s.fingerprints), () => s.compact()) },
+    "VideoFp" -> { d => val s = new VideoFpStore(spark, d)
+      AppendPath(() => s.ingestFrame(fps("doc_id", "frame_idx", "fp")),
+        () => sorted(s.fingerprints), () => s.compact()) },
+    "GifFp" -> { d => val s = new GifFpStore(spark, d)
+      AppendPath(() => s.ingestFrame(fps("doc_id", "frame_idx", "fp")),
+        () => sorted(s.fingerprints), () => s.compact()) },
+    "AudioEnergy" -> { d => val s = new AudioEnergyStore(spark, d)
+      AppendPath(() => s.ingestFrame(fps("doc_id", "frame_idx", "fp")),
+        () => sorted(s.fingerprints), () => s.compact()) })
+
+  for ((name, open) <- appendPaths)
+    test(s"$name: ingest into a compact crash window THROWS instead of " +
+      "creating a fresh store beside the preserved copy") {
+      import org.apache.hadoop.fs.{FileSystem, Path}
+      val base = Files.createTempDirectory("graft_store_crash").toString
+      val store = open(s"$base/store")
+      store.append()
+      val preCrash = store.rows()
+      assert(preCrash.nonEmpty)
+      // simulate the mid-swap crash: live dir renamed away to .compact_old
+      val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      fs.rename(new Path(s"$base/store"), new Path(s"$base/store.compact_old"))
+      val e = intercept[IllegalStateException] { store.append() }
+      assert(e.getMessage.contains("compact"))
+      // the preserved copy is untouched, and no fresh store appeared
+      assert(fs.exists(new Path(s"$base/store.compact_old")))
+      assert(!fs.exists(new Path(s"$base/store")))
+      // compact() heals: every pre-crash row is readable again
+      store.compact()
+      assert(store.rows() == preCrash)
+      assert(!fs.exists(new Path(s"$base/store.compact_old")))
+    }
+}
+
+private object SketchStoreSpec {
+
+  /** A store opened on a directory: append one batch, its rows as
+    * stored (rendered and sorted, to compare across the crash), and
+    * compact. */
+  final case class AppendPath(append: () => Unit, rows: () => Seq[String],
+      compact: () => Unit)
 }

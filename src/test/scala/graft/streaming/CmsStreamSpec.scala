@@ -30,7 +30,7 @@ class CmsStreamSpec extends SparkSpec {
 
     def drain(): Unit = {
       val in = spark.readStream.schema(first.schema).parquet(srcDir)
-      CmsStream.counterGrid(in, "h", width)
+      Sketch.cmBuild(in, "h", width)
         .writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)

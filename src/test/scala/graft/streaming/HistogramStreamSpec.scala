@@ -28,7 +28,7 @@ class HistogramStreamSpec extends SparkSpec {
 
     def drain(): Unit = {
       val in = spark.readStream.schema(first.schema).parquet(srcDir)
-      HistogramStream.bucketCounts(in, widths)
+      Profiling.bucketCounts(in, widths)
         .writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)

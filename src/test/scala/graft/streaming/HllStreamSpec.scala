@@ -37,7 +37,7 @@ class HllStreamSpec extends SparkSpec {
 
     def drain(): Unit = {
       val in = spark.readStream.schema(ev.schema).parquet(srcDir)
-      HllStream.registers(in, "event_type", "h", m = m)
+      Sketch.hllRegisters(in, "event_type", "h", m = m)
         .writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)

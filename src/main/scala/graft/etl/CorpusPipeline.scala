@@ -31,7 +31,9 @@ import graft.operators.{Dedup, Packing, Scrub, TextAnalysis}
   *       → sequence packing offsets (2048-token windows)
   *
   * Every stage is shuffle-on-key or row-local — the funnel inherits
-  * each operator's 100 TB shape. Stage survivor counts come back as
+  * each operator's 100 TB shape. The gates and the redaction are
+  * row-local expressions over one frame, not operator outputs joined
+  * back on doc_id. Stage survivor counts come back as
   * [[CorpusPipeline.Stats]]; the driver never holds document data.
   *
   * Filter thresholds mirror the registry defaults (q16/q18/q31's
@@ -97,29 +99,22 @@ object CorpusPipeline {
       val afterParagraph = stripped.count()
 
       // quality + repetition gates (the q23/q35 signals)
-      val quality = TextAnalysis.qualityScores(stripped, "doc_id", "text")
-        .where(col("quality_band") =!= "low").select(col("doc_id"))
-      val lowRep = TextAnalysis.repetitionSignals(stripped, "doc_id", "text")
-        .where(col("dup_gram_ratio").isNull ||
-          col("dup_gram_ratio") <= maxRepetition)
-        .select(col("doc_id"))
-      val kept = scope.persist(
-        stripped.join(quality, Seq("doc_id")).join(lowRep, Seq("doc_id")))
+      val ratio = TextAnalysis.dupGramRatio(col("text"))
+      val kept = scope.persist(stripped.where(
+        TextAnalysis.qualityBand(col("text")) =!= "low" &&
+          (ratio.isNull || ratio <= maxRepetition)))
       val afterQuality = kept.count()
 
       // redaction: PII then network identifiers over the final text
-      val pii = Scrub.redactPii(kept, "doc_id", "text")
-        .select(col("doc_id"), col("redacted").as("text"))
-      val clean = Scrub.redactNetwork(pii, "doc_id", "text")
-        .select(col("doc_id"), col("redacted").as("text"))
-        .join(kept.drop("text"), Seq("doc_id"))
+      val clean = kept.withColumn("text", Scrub.redact(col("text")))
 
       // eval-set decontamination over the FINAL text (between dedup
       // and export): q49's one-sided shingle-overlap gate — the eval
       // union set broadcasts (benchmarks-small), the train side is
       // one pass, contaminated docs leave by anti-join. Equivalent by
       // construction to running the standalone gate over the no-eval
-      // funnel's `clean/` output (MainSpec pins the identity).
+      // funnel's `clean/` output (CorpusPipelineSpec pins the
+      // identity).
       val gated = eval match {
         case Some(ev) =>
           val c = scope.persist(clean)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PII scrubbing for pretraining corpora: redact personally
@@ -37,9 +37,11 @@ object Scrub {
       size(expr(
         s"regexp_extract_all(regexp_replace($textCol, '$emailRe', '<EMAIL>'), '$longDigitsRe', 0)"))
         .as("n_digit_runs"),
-      regexp_replace(
-        regexp_replace(col(textCol), emailRe, "<EMAIL>"),
-        longDigitsRe, "<NUM>").as("redacted"))
+      maskPii(col(textCol)).as("redacted"))
+
+  private def maskPii(text: Column): Column =
+    regexp_replace(regexp_replace(text, emailRe, "<EMAIL>"),
+      longDigitsRe, "<NUM>")
 
   /** URLs, scheme-anchored with a greedy path class. A trailing
     * sentence dot can be absorbed into the match — acceptable for
@@ -66,9 +68,16 @@ object Scrub {
       size(expr(
         s"regexp_extract_all(regexp_replace($textCol, '$urlRe', '<URL>'), '$ipv4Re', 0)"))
         .as("n_ips"),
-      regexp_replace(
-        regexp_replace(col(textCol), urlRe, "<URL>"),
-        ipv4Re, "<IP>").as("redacted"))
+      maskNetwork(col(textCol)).as("redacted"))
+
+  private def maskNetwork(text: Column): Column =
+    regexp_replace(regexp_replace(text, urlRe, "<URL>"), ipv4Re, "<IP>")
+
+  /** The full redaction of one text, row-local: [[redactPii]]'s
+    * `redacted` (e-mails, then digit runs) fed through
+    * [[redactNetwork]]'s (URLs, then IPs). The redaction step of the
+    * curation funnel and its streaming twin. */
+  def redact(text: Column): Column = maskNetwork(maskPii(text))
 
   /** ENCODING HEALTH AUDIT — the mojibake screen of an ingest
     * pipeline: per group, how many docs carry C0 control characters

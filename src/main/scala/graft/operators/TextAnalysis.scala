@@ -27,13 +27,9 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist"),
     "fr" -> Seq("le", "les", "et", "est", "une"))
 
-  // compiled marker-set counter (r5 verdict item 5): the HOF
-  // formulation `size(filter(w, t => t.isin(...)))` evaluated
-  // interpretively per token; [[graft.functions.MarkerCount]] runs the
-  // same membership test as one generated loop (TextHashNativeSpec
-  // pins the two equal)
-  private def markerCount(words: Column, markers: Seq[String]): Column =
-    TextHash.markerCountOf(words, markers)
+  /** q23's stopwords: the quality band's stopword ratio and the
+    * length-bias curve count these tokens. */
+  val stopwords: Seq[String] = Seq("the", "a", "of", "and", "is", "to", "in")
 
   /** Marker-token language-ID heuristic: count stopword hits per
     * language profile, predict the argmax (deterministic preference
@@ -46,7 +42,7 @@ object TextAnalysis {
         TextHash.tokens(lower(col(textCol))).as("w"))
       .select(col("lang") +: size(col("w")).as("n_tokens") +:
         markerSets.map { case (l, ms) =>
-          markerCount(col("w"), ms).as(s"c_$l")
+          TextHash.markerCountOf(col("w"), ms).as(s"c_$l")
         }: _*)
     val Seq(en, es, de, fr) = markerSets.map(m => col(s"c_${m._1}"))
     val pred = scored.withColumn("lang_pred", langPred(en, es, de, fr))
@@ -112,7 +108,7 @@ object TextAnalysis {
         TextHash.tokens(lower(col(textCol))).as("w"))
       .select(col("n_bytes") +: col("n_tokens") +:
         markerSets.map { case (l, ms) =>
-          markerCount(col("w"), ms).as(s"c_$l")
+          TextHash.markerCountOf(col("w"), ms).as(s"c_$l")
         }: _*)
     val Seq(en, es, de, fr) = markerSets.map(m => col(s"c_${m._1}"))
     scored.withColumn("lang", langPred(en, es, de, fr))
@@ -170,7 +166,6 @@ object TextAnalysis {
     * exact integers. */
   def qualityScores(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    val stop = Seq("the", "a", "of", "and", "is", "to", "in")
     val base = docs.select(
       col(idCol).as("doc_id"),
       length(col(textCol)).as("n_chars"),
@@ -181,7 +176,7 @@ object TextAnalysis {
       col("doc_id"), col("n_chars"),
       size(col("w")).as("n_tokens"),
       TextHash.sumTokenLengthsOf(col("w")).as("sum_tok_len"),
-      markerCount(col("w"), stop).as("n_stop"),
+      TextHash.markerCountOf(col("w"), stopwords).as("n_stop"),
       col("n_punct"))
     // zero-divisor guards: Spark's Divide yields null on /0 but DuckDB
     // yields inf/nan under IEEE semantics — an empty doc would silently
@@ -197,11 +192,26 @@ object TextAnalysis {
       stopRatio.as("stopword_ratio"),
       when(col("n_chars") > 0,
         col("n_punct").cast("double") / col("n_chars")).as("punct_ratio"),
-      when(col("n_tokens") >= 40 && stopRatio >= 0.05, "high")
-        .when(col("n_tokens") >= 15, "medium")
-        .otherwise("low").as("quality_band"))
+      band(col("n_tokens"), col("n_stop")).as("quality_band"))
       .orderBy(col("doc_id"))
   }
+
+  /** q23's quality band of one text, row-local: "high" with at least
+    * 40 tokens and a stopword ratio of at least 0.05, "medium" with at
+    * least 15 tokens, else "low" (also for NULL text). The quality gate
+    * of the curation funnel and its streaming twin; [[qualityScores]]
+    * reports the same band per document. */
+  def qualityBand(text: Column): Column = {
+    val w = TextHash.tokens(text)
+    band(size(w), TextHash.markerCountOf(w, stopwords))
+  }
+
+  // the band from a document's token and stopword counts; the ratio is
+  // only read at 40+ tokens, so it needs no zero-divisor guard
+  private def band(nTokens: Column, nStop: Column): Column =
+    when(nTokens >= 40 && nStop.cast("double") / nTokens >= 0.05, "high")
+      .when(nTokens >= 15, "medium")
+      .otherwise("low")
 
   /** Corpus term statistics under a BPE-ish regex tokenizer
     * (letter-runs | digit-runs | single punctuation): global occurrence
@@ -257,13 +267,23 @@ object TextAnalysis {
         size(col("sh")).as("n_distinct_grams"))
       .select(col("doc_id"), col("n_tokens"), col("n_distinct_tokens"),
         col("n_grams"), col("n_distinct_grams"),
-        when(col("n_tokens") > 0, lit(1.0) -
-          col("n_distinct_tokens").cast("double") / col("n_tokens"))
+        dupRatio(col("n_tokens"), col("n_distinct_tokens"))
           .as("dup_token_ratio"),
-        when(col("n_grams") > 0, lit(1.0) -
-          col("n_distinct_grams").cast("double") / col("n_grams"))
+        dupRatio(col("n_grams"), col("n_distinct_grams"))
           .as("dup_gram_ratio"))
       .orderBy(col("doc_id"))
+
+  /** q35's dup-gram ratio of one text, row-local: the share of its word
+    * 3-grams that repeat another, `1 - distinct/total`; NULL below 3
+    * tokens. The repetition gate of the curation funnel and its
+    * streaming twin; [[repetitionSignals]] reports the same ratio. */
+  def dupGramRatio(text: Column): Column =
+    dupRatio(size(TextHash.tokenHashesOf(text)) - 2,
+      size(TextHash.shingleHashesOf(text)))
+
+  // 1 - distinct/total, NULL when there is no unit to repeat
+  private def dupRatio(total: Column, distinct: Column): Column =
+    when(total > 0, lit(1.0) - distinct.cast("double") / total)
 
   /** Cross-corpus shingle commonness — the "is this document made of
     * text the corpus has seen a thousand times" signal (q35 measures
@@ -793,7 +813,6 @@ object TextAnalysis {
   def lengthBiasCurve(docs: DataFrame, textCol: String,
       bucketChars: Int = 1024): DataFrame = {
     require(bucketChars > 0, s"bucketChars must be positive: $bucketChars")
-    val stop = Seq("the", "a", "of", "and", "is", "to", "in")
     val base = docs.select(
       length(col(textCol)).as("n_chars"),
       TextHash.tokens(col(textCol)).as("w"),
@@ -803,7 +822,7 @@ object TextAnalysis {
         (col("n_chars").cast("long") / lit(bucketChars.toLong))
           .cast("long").as("bucket"),
         col("n_chars"), size(col("w")).as("n_tokens"),
-        markerCount(col("w"), stop).as("n_stop"), col("n_punct"))
+        TextHash.markerCountOf(col("w"), stopwords).as("n_stop"), col("n_punct"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),

@@ -1238,7 +1238,7 @@ private[queries] trait ExtProfilingQ { self: ExtHelpers =>
       val toks = graft.functions.TextHash.tokens(col("text"))
       val scored = docs.select(col("doc_id"),
         graft.functions.TextHash.markerCountOf(toks,
-          Seq("the", "a", "of", "and", "is", "to", "in")).as("n_stop"),
+          TextAnalysis.stopwords).as("n_stop"),
         size(toks).as("n_tokens"))
       Profiling.scoreOutcomeCalibration(scored, "doc_id", "n_stop",
         "n_tokens", pos, "doc_id", bins = 8)

@@ -1,26 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextHash
-import graft.operators.Scrub
+import graft.operators.{Scrub, TextAnalysis}
 
 /** Streaming corpus curation — the incremental twin of the batch
   * funnel ([[graft.etl.CorpusPipeline]]): watermark-bounded exact
   * dedup → quality-band gate → repetition gate → PII + network
   * redaction, applied as documents arrive.
   *
-  * Every gate and the redaction are ROW-LOCAL expressions (the
-  * compiled [[TextHash]] passes + regex chains), so the only stateful
-  * operator in the stream is [[DedupStream.uniqueDocs]]'s bounded
-  * dedup — state stays at the watermark horizon regardless of corpus
-  * size, and the gates add zero state. Near-dup dedup (LSH clustering)
-  * and paragraph-level boilerplate removal deliberately stay
-  * batch-side: the former's candidate joins and the latter's
-  * paragraph document-frequency both need corpus-wide visibility that
-  * a bounded state store cannot give (same argument as full-history
-  * exact dedup, see DedupStream's scaladoc).
+  * Every gate and the redaction are the batch funnel's ROW-LOCAL
+  * expressions ([[TextAnalysis.qualityBand]], [[TextAnalysis.dupGramRatio]],
+  * [[Scrub.redact]]), so the only stateful operator in the stream is
+  * [[DedupStream.uniqueDocs]]'s bounded dedup — state stays at the
+  * watermark horizon regardless of corpus size, and the gates add zero
+  * state. Near-dup dedup (LSH clustering) and paragraph-level
+  * boilerplate removal deliberately stay batch-side: the former's
+  * candidate joins and the latter's paragraph document-frequency both
+  * need corpus-wide visibility that a bounded state store cannot give
+  * (same argument as full-history exact dedup, see DedupStream's
+  * scaladoc).
   *
   * Two documented deltas vs the batch funnel, both inherent to
   * streaming: (a) dedup keeps the FIRST ARRIVAL, where batch keeps the
@@ -33,27 +33,6 @@ import graft.operators.Scrub
   */
 object CurateStream {
 
-  private def qualityBand(text: Column): Column = {
-    // TextAnalysis.qualityScores's banded verdict, re-derived row-local
-    // (the batch op's trailing orderBy makes it unusable on a stream)
-    val stop = Seq("the", "a", "of", "and", "is", "to", "in")
-    val w = TextHash.tokens(text)
-    val n = size(w)
-    val stopRatio = when(n > 0,
-      TextHash.markerCountOf(w, stop).cast("double") / n)
-    when(n >= 40 && stopRatio >= 0.05, "high")
-      .when(n >= 15, "medium")
-      .otherwise("low")
-  }
-
-  private def dupGramRatio(text: Column): Column = {
-    // TextAnalysis.repetitionSignals's dup_gram_ratio (q35)
-    val wh = TextHash.tokenHashesOf(text)
-    val nGrams = greatest(size(wh) - 2, lit(0))
-    when(nGrams > 0,
-      lit(1.0) - size(TextHash.shingleHashesOf(text)).cast("double") / nGrams)
-  }
-
   /** The curated stream: `docs` must be a STREAMING frame with
     * event-time `tsCol`. Output rows carry (idCol, tsCol, textCol) with
     * the text redacted — the rows the batch funnel would have written
@@ -62,20 +41,10 @@ object CurateStream {
       tsCol: String, delay: String, maxRepetition: Double = 0.5)
       : DataFrame = {
     val deduped = DedupStream.uniqueDocs(docs, textCol, tsCol, delay)
-    val dup = dupGramRatio(col(textCol))
-    // redaction chain in the batch funnel's order: emails, digit runs
-    // (redactPii), then URLs, IPs (redactNetwork) — order is semantic,
-    // see Scrub.redactNetwork on dotted-quad URL hosts
-    val redacted = regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(col(textCol), Scrub.emailRe, "<EMAIL>"),
-          Scrub.longDigitsRe, "<NUM>"),
-        Scrub.urlRe, "<URL>"),
-      Scrub.ipv4Re, "<IP>")
+    val dup = TextAnalysis.dupGramRatio(col(textCol))
     deduped
-      .where(qualityBand(col(textCol)) =!= "low")
+      .where(TextAnalysis.qualityBand(col(textCol)) =!= "low")
       .where(dup.isNull || dup <= maxRepetition)
-      .select(col(idCol), col(tsCol), redacted.as(textCol))
+      .select(col(idCol), col(tsCol), Scrub.redact(col(textCol)).as(textCol))
   }
 }

@@ -2,11 +2,12 @@ package graft.etl
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.engine.CacheScope
+import graft.operators.{Dedup, Packing, Scrub, TextAnalysis}
 
 /** The curation funnel end-to-end over the sf0.001 documents fixture:
   * stage counts form a monotone funnel, outputs are readable, and the
@@ -15,6 +16,80 @@ import graft.engine.CacheScope
   * persistent-RDD count would race whatever a concurrently-running
   * suite persists. */
 class CorpusPipelineSpec extends SparkSpec {
+
+  private val fixture = "/root/testdata/sf0.001/documents.parquet"
+
+  // eval = every 7th doc's RAW text
+  private def evalSet: DataFrame = spark.read.parquet(fixture)
+    .where(col("doc_id") % 7 === 0)
+    .select(col("doc_id"), col("text"))
+
+  /** The funnel with its quality gates and redaction in their earlier
+    * join shape: each signal comes from its frame operator
+    * (qualityScores, repetitionSignals, redactPii, redactNetwork) and
+    * is joined back on doc_id. The other stages are curate's own. */
+  private def joinShapedCurate(out: String, eval: Option[DataFrame])
+      : CorpusPipeline.Stats = CacheScope.withScope { scope =>
+    val docs = spark.read.parquet(fixture)
+    val keepExact = Dedup.exact(docs, "doc_id", "text")
+      .select(col("keep_id").as("doc_id"))
+    val exact = scope.persist(docs.join(keepExact, Seq("doc_id")))
+    val pairs = Dedup.minhashLshPairs(exact, "doc_id", "text", scope = scope)
+    val canonical = Dedup.nearDupClusters(exact, "doc_id", pairs)
+      .where(col("is_canonical")).select(col("doc_id"))
+    val deduped = scope.persist(exact.join(canonical, Seq("doc_id")))
+    val stripped = scope.persist(
+      Dedup.cleanBoilerplateParagraphs(deduped, "doc_id", "text", maxDf = 10)
+        .where(col("n_kept") > 0)
+        .select(col("doc_id"), col("cleaned").as("text"))
+        .join(deduped.drop("text"), Seq("doc_id")))
+    val quality = TextAnalysis.qualityScores(stripped, "doc_id", "text")
+      .where(col("quality_band") =!= "low").select(col("doc_id"))
+    val lowRep = TextAnalysis.repetitionSignals(stripped, "doc_id", "text")
+      .where(col("dup_gram_ratio").isNull || col("dup_gram_ratio") <= 0.5)
+      .select(col("doc_id"))
+    val kept = scope.persist(
+      stripped.join(quality, Seq("doc_id")).join(lowRep, Seq("doc_id")))
+    val pii = Scrub.redactPii(kept, "doc_id", "text")
+      .select(col("doc_id"), col("redacted").as("text"))
+    val clean = Scrub.redactNetwork(pii, "doc_id", "text")
+      .select(col("doc_id"), col("redacted").as("text"))
+      .join(kept.drop("text"), Seq("doc_id"))
+    val gated = eval.fold(clean) { ev =>
+      val c = scope.persist(clean)
+      c.join(Dedup.evalOverlapRate(c, ev, "doc_id", "text")
+          .where(col("contaminated") === 1).select(col("doc_id")),
+        Seq("doc_id"), "left_anti")
+    }
+    gated.write.parquet(s"$out/clean")
+    val cleanDocs = spark.read.parquet(s"$out/clean")
+    Packing.contiguousOffsets(cleanDocs, "doc_id", "text", scope = scope)
+      .write.parquet(s"$out/packs")
+    val packs = spark.read.parquet(s"$out/packs")
+      .agg(max(col("pack_id"))).head().getLong(0) + 1
+    CorpusPipeline.Stats(docs.count(), exact.count(), deduped.count(),
+      stripped.count(), kept.count(), kept.count() - cleanDocs.count(),
+      packs)
+  }
+
+  /** Spark jobs `body` runs, counted once the listener bus drains. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  private def sameOutputs(out: String, ref: String): Unit =
+    Seq("clean", "packs").foreach { o =>
+      val (got, want) = (spark.read.parquet(s"$out/$o"),
+        spark.read.parquet(s"$ref/$o"))
+      assert(got.schema == want.schema, o)
+      def rows(f: DataFrame): Seq[String] =
+        f.collect().toSeq.map((_: Row).toString).sorted
+      assert(rows(got) == rows(want), o)
+    }
 
   private def isCached(f: DataFrame): Boolean =
     spark.sharedState.cacheManager
@@ -57,14 +132,11 @@ class CorpusPipelineSpec extends SparkSpec {
     "standalone q49 gate applied to the no-eval funnel's clean output") {
     val out0 = Files.createTempDirectory("graft_corpus_noeval").toString
     val out1 = Files.createTempDirectory("graft_corpus_eval").toString
-    val docs = "/root/testdata/sf0.001/documents.parquet"
-    // eval = every 7th doc's RAW text — the funnel must flag the
-    // surviving copies of exactly those texts in its FINAL (stripped,
-    // redacted) form, which is what the standalone composition below
-    // replays
-    val eval = spark.read.parquet(docs)
-      .where(col("doc_id") % 7 === 0)
-      .select(col("doc_id"), col("text"))
+    val docs = fixture
+    // the funnel must flag the surviving copies of exactly the eval
+    // texts in their FINAL (stripped, redacted) form, which is what the
+    // standalone composition below replays
+    val eval = evalSet
     val s0 = CorpusPipeline.curate(spark, docs, out0)
     assert(s0.droppedEval == 0L)
     val clean0 = spark.read.parquet(s"$out0/clean")
@@ -111,5 +183,31 @@ class CorpusPipelineSpec extends SparkSpec {
     // stats count (shard, pack) windows, consistent with the data
     val windows = packs.select("shard", "pack_id").distinct().count()
     assert(s.packs == windows)
+  }
+
+  test("curate equals the join-shaped reference funnel: stats, clean/ " +
+    "rows and schema, packs/") {
+    val out = Files.createTempDirectory("graft_corpus_rowlocal").toString
+    val ref = Files.createTempDirectory("graft_corpus_joined").toString
+    val s = CorpusPipeline.curate(spark, fixture, out)
+    assert(s == joinShapedCurate(ref, None))
+    sameOutputs(out, ref)
+  }
+
+  test("curate with an eval set equals the join-shaped reference and " +
+    "stays within its Spark job budget") {
+    val out = Files.createTempDirectory("graft_corpus_rowlocal_eval").toString
+    val ref = Files.createTempDirectory("graft_corpus_joined_eval").toString
+    var s: CorpusPipeline.Stats = null
+    val jobs = jobsOf("curate with eval") {
+      s = CorpusPipeline.curate(spark, fixture, out, eval = Some(evalSet))
+    }
+    val r = joinShapedCurate(ref, Some(evalSet))
+    assert(r.droppedEval > 0, "eval subset must actually contaminate")
+    assert(s == r)
+    sameOutputs(out, ref)
+    // the gates and redaction filter one frame: 57 jobs here, where
+    // joining their derived frames back on doc_id ran 60
+    assert(jobs <= 57, s"$jobs jobs")
   }
 }

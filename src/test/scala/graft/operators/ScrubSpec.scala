@@ -166,4 +166,31 @@ class ScrubSpec extends SparkSpec {
     assert(!verdict(3L, 2L))
     assert(verdict(5L, 2L))
   }
+
+  test("redact equals redactPii's text fed through redactNetwork; a " +
+    "dotted-quad URL host leaves as one <URL>") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    val texts = Seq(null, "", "no identifiers here",
+      "write agent007@example.com, quote 123456789",
+      "see https://10.0.0.7/path or 192.168.1.1")
+    val d = spark.createDataFrame(
+      texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType))))
+    val pii = Scrub.redactPii(d, "doc_id", "text")
+      .select(col("doc_id"), col("redacted").as("text"))
+    val want = Scrub.redactNetwork(pii, "doc_id", "text")
+      .select("doc_id", "redacted").orderBy("doc_id").collect().toSeq
+    val got = d.select(col("doc_id"),
+      Scrub.redact(col("text")).as("redacted"))
+      .orderBy("doc_id").collect().toSeq
+    assert(got == want)
+    assert(got.map(r => Option(r.getString(1))) == Seq(None, Some(""),
+      Some("no identifiers here"), Some("write <EMAIL>, quote <NUM>"),
+      Some("see <URL> or <IP>")))
+  }
 }

@@ -566,4 +566,30 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(1L) == ((4L, -12L, -3.0))) // 4 * band(bb)
     assert(out(2L) == ((2L, -2L, -1.0)))  // band(aa) + band(bb)
   }
+
+  test("qualityBand and dupGramRatio equal the bands and ratios of " +
+    "qualityScores and repetitionSignals") {
+    import org.apache.spark.sql.functions.col
+    val d = docs(
+      null,                                     // NULL text
+      "",                                       // empty
+      "uno dos",                                // < 3 tokens: no grams
+      "a b c d a b c d",                        // repeated passage
+      Seq.fill(5)("one two three").mkString(" "),      // 15 tokens
+      Seq.fill(14)("the cat sat").mkString(" "),       // 42, stopwords
+      (1 to 45).map(i => s"w$i").mkString(" "))        // 45, no stopword
+    val want = TextAnalysis.qualityScores(d, "doc_id", "text")
+      .select("doc_id", "quality_band")
+      .join(TextAnalysis.repetitionSignals(d, "doc_id", "text")
+        .select("doc_id", "dup_gram_ratio"), "doc_id")
+    val got = d.select(col("doc_id"),
+      TextAnalysis.qualityBand(col("text")).as("quality_band"),
+      TextAnalysis.dupGramRatio(col("text")).as("dup_gram_ratio"))
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.orderBy("doc_id").collect().toSeq
+    assert(rows(got) == rows(want))
+    assert(rows(got).map(_.getString(1)) ==
+      Seq("low", "low", "low", "low", "medium", "high", "medium"))
+    assert(rows(got).take(3).forall(_.isNullAt(2)))
+  }
 }
